@@ -27,6 +27,16 @@ object Cache {
   def sessionKey(spark: SparkSession): String =
     spark.sparkContext.applicationId
 
+  /** Build `name` once per (session, dir) and `persist` it.
+    *
+    * The persisted frame keeps its physical plan, and the plan keeps
+    * every broadcast it executed reachable: each broadcast relation
+    * in the build's lineage stays in memory for the rest of the
+    * session, however small the cached rows are. That is why the
+    * session's Tungsten page size (which sizes each deserialized
+    * relation) is pinned small in [[Tuning.SessionDefaults]]; an
+    * artifact whose lineage must not stay live takes [[getOrSnapshot]]
+    * instead. */
   def getOrPersist(spark: SparkSession, name: String, dir: String)
                   (build: => DataFrame): DataFrame =
     store.getOrElseUpdate(

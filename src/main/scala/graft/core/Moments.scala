@@ -96,45 +96,6 @@ object Moments {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Both moment families — LONG and DECIMAL(38,0) — from ONE
-    * self-join + ONE groupBy pass over the ratings: the columns of
-    * [[pairMoments]] plus the [[pairMomentsDec]] sums as
-    * `sx_dec..sxy_dec`. The two standalone builders each pay the full
-    * C(n,2) pair explosion; when a deployment wants both
-    * representations warm (the serving case here: the LONG family
-    * feeds 7 similarity queries, the DECIMAL twin is the
-    * overflow-audit surface), fusing them halves the shared build —
-    * same groupBy keys, extra aggregate columns, zero extra shuffle.
-    *
-    * Envelope note: at magnitudes where LONG products would actually
-    * overflow (rating_i ≳ 3·10^9) this fused form is unusable by
-    * construction — run [[pairMomentsDec]] alone there. The fused
-    * build is for the regime where both families are valid and wanted.
-    */
-  def pairMomentsBoth(ratings: DataFrame): DataFrame = {
-    val a = ratings.select(col("user_id"), col("item_id").as("item_x"),
-      col("rating_i").as("rx"))
-    val b = ratings.select(col("user_id"), col("item_id").as("item_y"),
-      col("rating_i").as("ry"))
-    val rxD = col("rx").cast("decimal(19,0)")
-    val ryD = col("ry").cast("decimal(19,0)")
-    a.join(b, Seq("user_id"))
-      .where(col("item_x") < col("item_y"))
-      .groupBy(col("item_x"), col("item_y"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("rx")).as("sx"),
-        sum(col("ry")).as("sy"),
-        sum(col("rx") * col("rx")).as("sxx"),
-        sum(col("ry") * col("ry")).as("syy"),
-        sum(col("rx") * col("ry")).as("sxy"),
-        sum(rxD).as("sx_dec"),
-        sum(ryD).as("sy_dec"),
-        sum(rxD * rxD).as("sxx_dec"),
-        sum(ryD * ryD).as("syy_dec"),
-        sum(rxD * ryD).as("sxy_dec"))
-  }
-
   /** Cross-side pair moments: every co-rating pair with one rating
     * from `a` and one from `b` (same user, distinct items),
     * canonicalized to `item_x < item_y` — the incremental-fold term
@@ -188,20 +149,6 @@ object Moments {
         sum(col("sxx")).as("sxx"),
         sum(col("syy")).as("syy"),
         sum(col("sxy")).as("sxy"))
-
-  /** The LONG-family projection of a [[pairMomentsBoth]] frame —
-    * column-for-column the [[pairMoments]] schema. */
-  def longView(both: DataFrame): DataFrame =
-    both.select(col("item_x"), col("item_y"), col("n"),
-      col("sx"), col("sy"), col("sxx"), col("syy"), col("sxy"))
-
-  /** The DECIMAL-family projection of a [[pairMomentsBoth]] frame —
-    * column-for-column the [[pairMomentsDec]] schema. */
-  def decView(both: DataFrame): DataFrame =
-    both.select(col("item_x"), col("item_y"), col("n"),
-      col("sx_dec").as("sx"), col("sy_dec").as("sy"),
-      col("sxx_dec").as("sxx"), col("syy_dec").as("syy"),
-      col("sxy_dec").as("sxy"))
 
   /** Moments pre-cast to DOUBLE in the fixed order the metric formulas
     * (and their SQL twins) consume: nd, sxd, syd, sxxd, syyd, sxyd. */

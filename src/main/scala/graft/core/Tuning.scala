@@ -45,8 +45,8 @@ object Tuning {
     //    bytecodes (-XX:HugeMethodLimit, not configurable), so a
     //    whole-stage-codegen method between 8000 and 65535 bytecodes
     //    runs INTERPRETED forever. The fused 11-aggregate pair-moment
-    //    build generates exactly such a method: measured 17.0 s at
-    //    sf0.1 under the default vs 5.1 s with the limit at 8000
+    //    build (since split) generated exactly such a method: measured
+    //    17.0 s at sf0.1 under the default vs 5.1 s with the limit at 8000
     //    (Spark falls back to non-wholestage execution for that one
     //    stage, whose smaller per-expression methods all JIT). 8000
     //    matches the JVM's own limit, so the only stages affected are
@@ -54,7 +54,24 @@ object Tuning {
     //    semantics are unchanged, and the setting is host-independent
     //    (the bytecode limit is a HotSpot constant, identical on any
     //    cluster JVM). r16 optimization round, guide §4.
-    "spark.sql.codegen.hugeMethodLimit" -> "8000")
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    //  - `spark.buffer.pageSize` = 2m (default heap / cores / 16,
+    //    rounded up to a power of two: 64 MB under a 7g heap on 4
+    //    cores): the Tungsten page size bounds every sort,
+    //    hash-aggregate and shuffle-sort page, plus each deserialized
+    //    broadcast relation — `UnsafeHashedRelation` rebuilds a
+    //    multi-column-key broadcast as a `BytesToBytesMap` over whole
+    //    pages, so a 10-row build side held one 64 MB `long[]`, and a
+    //    persisted artifact's cached plan keeps its broadcasts
+    //    reachable for the session (measured at sf0.01, 4 cores, 7g:
+    //    the llm_sql bench session's live heap after full GC fell
+    //    from 1482 MB to 222 MB). A record larger than a page gets a
+    //    page of its own, and 8192 pages per task still address
+    //    16 GB, so no operator loses capacity; page size never
+    //    changes a result, only how memory is carved. It is read
+    //    when the SparkContext's memory manager is built, so it must
+    //    be set here, on the builder — a later `conf.set` is ignored.
+    "spark.buffer.pageSize" -> "2m")
 
   /** Fold the defaults into a builder (every graft main + the test
     * session apply this, so no operator needs a session mutation). */

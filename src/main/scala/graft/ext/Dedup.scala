@@ -531,6 +531,31 @@ object Dedup {
         least(col("c1"), col("c2")).cast("double")))
   }
 
+  /** The τ sweep over scored pairs (v1, v2, cos_sim): for each
+    * threshold τ = i·0.05, i in 0..9, how many pairs reach it and how
+    * many distinct `v2` docs a keep-first pass would drop. `cos_sim`
+    * is [[graft.core.Det.r4]]-rounded, so the comparison runs on the
+    * exact 1e-4 integer axis: `i.cast(double) * 0.05` is
+    * 0.35000000000000003 at i = 7 (likewise i = 3 and 6) and would
+    * drop a pair sitting exactly on τ, where SQL's DECIMAL 0.05 keeps
+    * it. */
+  def thresholdSweep(pairs: DataFrame): DataFrame = {
+    import graft.core.Det
+    val taus = pairs.sparkSession.range(0, 10).select(col("id").as("i"))
+    val hits = taus.join(pairs,
+        floor(pairs("cos_sim") * lit(10000.0) + lit(0.5)) >=
+          taus("i") * lit(500))
+      .groupBy(col("i"))
+      .agg(count(lit(1)).as("n_pairs"),
+        countDistinct(col("v2")).as("n_dropped_docs"))
+    taus.join(hits, Seq("i"), "left")
+      .select((col("i") * 5).as("tau_pct"),
+        Det.r4(col("i").cast("double") * lit(0.05)).as("tau"),
+        coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
+        coalesce(col("n_dropped_docs"), lit(0L)).as("n_dropped_docs"))
+      .orderBy(col("tau_pct"))
+  }
+
   /** Benchmark decontamination hits: for every training doc, how many
     * DISTINCT n-grams it shares with the benchmark set and how many
     * distinct benchmark docs it collides with. Inputs are distinct

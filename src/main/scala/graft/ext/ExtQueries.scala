@@ -1209,21 +1209,8 @@ object ExtQueries {
     // many docs a keep-first pass would drop. Pairs are the capped
     // banded candidates (bounded, never N²) crossed with a 10-row
     // threshold axis — the sweep costs one pass over the pair table.
-    "q_dedup_threshold_sweep" -> ((s, d) => {
-      val taus = s.range(0, 10).select(col("id").as("i"))
-      val pairs = bandedCosC(s, d)
-      val hits = taus.join(pairs,
-          pairs("cos_sim") >= taus("i").cast("double") * lit(0.05))
-        .groupBy(col("i"))
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("v2")).as("n_dropped_docs"))
-      taus.join(hits, Seq("i"), "left")
-        .select((col("i") * 5).as("tau_pct"),
-          Det.r4(col("i").cast("double") * lit(0.05)).as("tau"),
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_dropped_docs"), lit(0L)).as("n_dropped_docs"))
-        .orderBy(col("tau_pct"))
-    }),
+    "q_dedup_threshold_sweep" -> ((s, d) =>
+      Dedup.thresholdSweep(bandedCosC(s, d))),
 
     // LSH recall acceptance — q_ann_recall's twin for the TEXT dedup
     // stack: ground truth is every pair with exact n-gram Jaccard ≥

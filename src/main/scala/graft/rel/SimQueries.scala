@@ -43,7 +43,7 @@ object SimQueries {
 
   /** The LONG pair-moment cache (the 7 similarity queries, ranking,
     * serving, pipeline). r16 split: this WAS the fused LONG+DECIMAL
-    * table (Moments.pairMomentsBoth) — measured at sf0.1, the fused
+    * table (one aggregate, since deleted) — measured at sf0.1, the fused
     * 11-column persist costs 23.1 s vs 5.0 s for the LONG-only table
     * (12.7M pair rows; the five DECIMAL(38,0) aggregates plus their
     * columnar-cache encode dominate), and the decimal columns serve

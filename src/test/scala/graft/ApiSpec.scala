@@ -123,25 +123,41 @@ class ApiSpec extends SparkSpec {
       assert(exchanges == 1,
         s"self-join side should be exchange-free, only the pair group-by shuffles:\n$plan")
       assert(m.count() > 0 && again.count() == bucketed.count())
-      // the FUSED build (both moment families in one aggregate) must
-      // keep exactly the same exchange profile — extra columns, zero
-      // extra shuffle — and its projections must agree with the
-      // standalone builders
-      val both = graft.core.Moments.pairMomentsBoth(bucketed)
-      val planB = both.queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(planB).length == 1,
-        s"fused build must add no exchange:\n$planB")
-      val longSum = graft.core.Moments.longView(both)
-        .agg(org.apache.spark.sql.functions.sum("sxy")).head().getLong(0)
-      val plainSum = m
-        .agg(org.apache.spark.sql.functions.sum("sxy")).head().getLong(0)
-      assert(longSum == plainSum)
-      val decSum = graft.core.Moments.decView(both)
-        .agg(org.apache.spark.sql.functions.sum("sxy")).head()
-        .getDecimal(0)
-      assert(decSum.longValueExact() == plainSum)
     } finally
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("the session pins a 2 MiB Tungsten page, so a persisted frame's " +
+    "broadcast relation stays small") {
+    import spark.implicits._
+    val memory = { spark.sparkContext; org.apache.spark.SparkEnv.get }
+      .memoryManager
+    // Read when the SparkContext's memory manager is built: a default
+    // applied after the context exists would leave heap/cores/16 here.
+    assert(memory.pageSizeBytes == 2L * 1024 * 1024)
+    // The memory manager's own count: a broadcast value is stored
+    // without telling the block-manager master, so it never shows in
+    // `sc.getExecutorMemoryStatus`.
+    def storageUsed: Long = memory.storageMemoryUsed
+    // Two LONG keys (128 bits) cannot be packed into one long key, so
+    // the build side is an UnsafeHashedRelation: a BytesToBytesMap
+    // that takes whole pages however few rows it holds.
+    val dim = (0L until 10L).map(i => (i, i * 7, s"d$i"))
+      .toDF("k1", "k2", "label")
+    val fact = spark.range(0, 1000).select((col("id") % 10).as("k1"),
+      (col("id") % 10 * 7).as("k2"), col("id"))
+    val joined = fact.join(broadcast(dim), Seq("k1", "k2"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    val before = storageUsed
+    try {
+      // the cached plan keeps the broadcast reachable for the session
+      joined.persist()
+      assert(joined.count() == 1000)
+      val grown = storageUsed - before
+      assert(grown < 16L * 1024 * 1024,
+        s"persisting a 10-row broadcast join grew storage by $grown bytes")
+    } finally joined.unpersist(blocking = true)
   }
 
   test("q_semicolon_protocol plans the 10k cut as TakeOrderedAndProject") {

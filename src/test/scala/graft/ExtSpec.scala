@@ -946,6 +946,26 @@ class ExtSpec extends SparkSpec {
     }
   }
 
+  test("thresholdSweep counts a pair sitting exactly on τ = 0.15, 0.30 " +
+    "and 0.35") {
+    // i·0.05 in IEEE doubles overshoots at i = 3, 6 and 7; the SQL twin
+    // compares against the exact DECIMAL, and so does this reference
+    val cos = Seq(0.15, 0.3, 0.35, 0.1499, 0.45, -0.2)
+    val pairs = cos.zipWithIndex.map { case (c, k) => (0L, k + 1L, c) }
+      .toDF("v1", "v2", "cos_sim")
+    val rows = Dedup.thresholdSweep(pairs).collect()
+    assert(rows.map(_.getAs[Long]("tau_pct")).toSeq === (0L to 45L by 5L))
+    rows.foreach { r =>
+      val tau = BigDecimal(r.getAs[Long]("tau_pct")) / 100
+      val want = cos.count(c => BigDecimal(c) >= tau).toLong
+      assert(r.getAs[Long]("n_pairs") === want, s"at tau $tau")
+      assert(r.getAs[Long]("n_dropped_docs") === want, s"at tau $tau")
+    }
+    val byPct = rows.map(r =>
+      r.getAs[Long]("tau_pct") -> r.getAs[Long]("n_pairs")).toMap
+    assert(byPct(15L) === 4L && byPct(30L) === 3L && byPct(35L) === 2L)
+  }
+
   test("sq rerank orders a shortlist by dequantized cosine") {
     val emb = Seq(
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)),

@@ -179,20 +179,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sfDirG = sfDir
     outNameG = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budget =
       sys.env.getOrElse("SPARK_GRAFT_TIME_BUDGET_SEC", "2100").toDouble
     val tStart = System.nanoTime()
     def elapsed = (System.nanoTime() - tStart) / 1e9
     def mkSession(): SparkSession = {
-      val s = graft.core.Tuning.defaults(SparkSession.builder()
-        .master(s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = graft.core.Tuning.builder().getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
@@ -312,13 +304,7 @@ object Bench {
 
     // Cheapest-first: a mid-sweep kill preserves the most numbers; order
     // comes from the previous committed record, absent → registration order.
-    val costOrder: Map[String, Double] = try {
-      val txt = Files.readString(Paths.get(repoDir, "BENCH_FULL.json"))
-      val qobj = """"queries":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty[String, Double] }
+    val costOrder = Verify.costOrder(Paths.get(repoDir))
     // SPARK_GRAFT_BENCH_ONLY: iteration/fire-test subset — flagged in
     // the record ("bench_only") so a filtered run is never mistaken
     // for a full one; unknown names fail fast like Verify's arg check.

@@ -364,12 +364,7 @@ object ScaleGate {
     val out = if (fullStar) s"$targetDir/scalefull$factor"
               else s"$targetDir/scale$factor"
     def session(): SparkSession = {
-      val s = graft.core.Tuning.defaults(
-        SparkSession.builder().master("local[32]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = graft.core.Tuning.builder().getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }

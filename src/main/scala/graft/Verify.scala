@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -17,6 +16,17 @@ import java.nio.file.{Files, Paths}
   *     kill at time T preserves the MOST rows possible.
   */
 object Verify {
+  /** Per-query warm-pass seconds from `dir/BENCH_FULL.json`, whose
+    * "queries" object is flat {"name":sec,...}; a missing or
+    * unparseable record gives an empty map (registration order). */
+  def costOrder(dir: Path): Map[String, Double] = try {
+    val txt = Files.readString(dir.resolve("BENCH_FULL.json"))
+    val qobj = """"queries":\{([^}]*)\}""".r
+      .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
+    """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  } catch { case _: Throwable => Map.empty[String, Double] }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // MUST precede any touch of the query/oracle registries: the
@@ -30,15 +40,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tuning.defaults(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Tuning.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -57,15 +59,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Cheapest-first ordering: a timeout preserves the most dumped rows.
-    // BENCH_FULL.json's warm-pass "queries" object is flat {"name":sec,...};
-    // absence (fresh checkout, unparseable) degrades to registration order.
-    val costOrder: Map[String, Double] = try {
-      val txt = Files.readString(Paths.get("/root/repo/BENCH_FULL.json"))
-      val qobj = """"queries":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      """"([^"]+)":([-0-9.eE]+)""".r.findAllMatchIn(qobj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty[String, Double] }
+    val order = costOrder(Paths.get(Bench.repoDir))
     val progress = Paths.get(s"$outDir/progress.jsonl")
     // A rerun into a pre-existing outDir must not mix stale rows from a
     // prior run into the partial-run audit trail (Bench already deletes
@@ -78,7 +72,7 @@ object Verify {
     Runtime.getRuntime.addShutdownHook(new Thread(() => stopping = true))
     SparkEntry.queries.toList
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .sortBy { case (name, _) => costOrder.getOrElse(name, 1e9) }
+      .sortBy { case (name, _) => order.getOrElse(name, 1e9) }
       .iterator // lazy: takeWhile must observe `stopping` per element,
       .takeWhile(_ => !stopping) // not once at construction
       .foreach { case (name, fn) =>

@@ -58,8 +58,6 @@ object Ranking {
     */
   def topKAgg(df: DataFrame, partCol: String, scoreCol: Column,
               tieCol: Column, extraCol: Column, k: Int): DataFrame = {
-    val s = df.sparkSession
-    graft.expr.GraftFunctions.ensureRegistered(s)
     // ObjectHashAggregate falls back to SORT-BASED aggregation after
     // `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
     // distinct keys per task (default 128) — the sort is exactly what

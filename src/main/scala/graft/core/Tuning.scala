@@ -71,10 +71,32 @@ object Tuning {
     //    changes a result, only how memory is carved. It is read
     //    when the SparkContext's memory manager is built, so it must
     //    be set here, on the builder — a later `conf.set` is ignored.
-    "spark.buffer.pageSize" -> "2m")
+    "spark.buffer.pageSize" -> "2m",
+    //  - `spark.sql.extensions` = graft.GraftExtensions: the engine's
+    //    six native SQL functions (graft_hash, graft_fixed_dot,
+    //    graft_bloom_agg, graft_might_contain, graft_topk,
+    //    graft_simhash) are injected into every session of the
+    //    context; operators call them without registering anything.
+    //    A static conf, so like the page size it only works here.
+    "spark.sql.extensions" -> "graft.GraftExtensions")
 
-  /** Fold the defaults into a builder (every graft main + the test
-    * session apply this, so no operator needs a session mutation). */
+  /** Fold the defaults into a builder (every session — [[builder]]'s
+    * and the perfbench harness's own — applies this, so no operator
+    * needs a session mutation). */
   def defaults(b: SparkSession.Builder): SparkSession.Builder =
     SessionDefaults.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** The one session builder behind every graft main and the test
+    * session: [[defaults]] on `local[cpus]` with one shuffle partition
+    * per core, UTC session time and no UI. `cpus` is
+    * `SPARK_GRAFT_CPUS` when set, else every core the JVM sees.
+    * Callers add their own confs and call `getOrCreate()`. */
+  def builder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    defaults(SparkSession.builder().master(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+  }
 }

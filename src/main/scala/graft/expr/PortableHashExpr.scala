@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -68,58 +67,5 @@ object PortableHashImpl {
     val h = t(0) * 8191L + t(1) * 127L + t(3) * 31L +
       tail(n - 1) * 7L + tail(n) * 3L + n * 5381L
     (h % 1000003L).toInt
-  }
-}
-
-/** Session registration for the engine's native SQL functions. */
-object GraftFunctions {
-
-  /** Idempotently register the native functions on a session so they
-    * are callable from both `spark.sql` and `call_function`.
-    *
-    * `createOrReplaceTempFunction` is itself idempotent (a registry
-    * put), so no per-session guard set is kept — a set keyed on the
-    * session's identity hash could skip registration for a fresh
-    * session that reused a GC'd session's hash. The lock still
-    * matters: the warm chains in `SparkEntry.warmShared` run on
-    * concurrent futures, and a thread must not proceed to use
-    * `graft_hash` before a concurrent registration finished. */
-  def ensureRegistered(spark: SparkSession): Unit = this.synchronized {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash", exprs => PortableHashExpr(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fixed_dot",
-      exprs => FixedDotExpr(exprs.head, exprs(1)), "scala_udf")
-    // Spark's own Bloom build/probe expressions (the machinery behind
-    // its runtime row-level filters) are registry-internal — not
-    // resolvable from SQL — so surface them as temp functions. Build:
-    // graft_bloom_agg(xxhash64(col), estimatedItems, numBits) → binary;
-    // probe: graft_might_contain(filterBinary, xxhash64(col)). Both
-    // are native codegen expressions — no Scala UDF on the hot path.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "scala_udf")
-    // Sort-free exact per-group top-k (TopKAggExpr scaladoc): the
-    // ranking-window replacement for the similarity family's K cut.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1), exprs(2), exprs(3))
-        .toAggregateExpression(),
-      "scala_udf")
-    // One-buffer simhash bit-sum aggregate (SimhashAggExpr scaladoc):
-    // replaces the 32 separate declarative bit sums in the signature
-    // build.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs => SimhashAgg(exprs.head).toAggregateExpression(),
-      "scala_udf")
   }
 }

@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   */
 case class SimhashAgg(
     child: Expression,
-    bits: Int = 32,
+    bits: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] {

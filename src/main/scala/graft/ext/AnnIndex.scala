@@ -48,7 +48,6 @@ object AnnIndex {
     /** Broadcast-ready cell frame (cell_id, centroid, cnrm) — what
       * every assigned-serving path takes. */
     def cellsB: DataFrame = {
-      graft.expr.GraftFunctions.ensureRegistered(cells.sparkSession)
       broadcast(cells.select(col("cell_id"),
         col("centroid"),
         VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
@@ -61,7 +60,6 @@ object AnnIndex {
     * index at the path. */
   def save(emb: DataFrame, cells: DataFrame, path: String): Unit = {
     val spark = emb.sparkSession
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val cellsB = broadcast(cells.select(col("cell_id"), col("centroid"),
       VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
@@ -97,7 +95,6 @@ object AnnIndex {
     * corpus. */
   def append(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val ix = load(spark, path)
     VectorSearch.assignCells(delta, ix.cellsB)
       .write.mode("append").partitionBy("cell_id")
@@ -123,7 +120,6 @@ object AnnIndex {
     // schema inference, breaking load() for the serving path
     if (delta.isEmpty) return
     val spark = delta.sparkSession
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val ix = load(spark, path)
     VectorSearch.assignCells(delta, ix.cellsB)
       .write.mode("overwrite").partitionBy("cell_id")
@@ -162,7 +158,6 @@ object AnnIndex {
     * carry the delta rows. */
   def appendGraph(delta: DataFrame, path: String): Unit = {
     val spark = delta.sparkSession
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val deltaIds = broadcast(delta.select(col("vec_id").as("did")))
     // anti-join the delta out of the stored lists before re-unioning:
     // the documented call order (after [[append]]) means ivf_codes

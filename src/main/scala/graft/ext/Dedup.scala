@@ -286,7 +286,6 @@ object Dedup {
   val CdcMod = 64
   def contentChunks(docs: DataFrame): DataFrame = {
     import graft.core.PortableHash
-    graft.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
     val len = length(col("text"))
     // boundary ARRAY per doc, chunks cut per row — zero shuffle (the
     // first draft lead()-windowed over exploded boundary rows, which
@@ -345,7 +344,6 @@ object Dedup {
   def shingleHashes(sh: DataFrame): DataFrame = {
     // native single-pass hash expression (codegen'd); bit-identical to
     // PortableHash.h — see graft.expr.PortableHashExpr
-    graft.expr.GraftFunctions.ensureRegistered(sh.sparkSession)
     sh.select(col("doc_id"), call_function("graft_hash", col("shingle")).as("h"))
   }
 
@@ -583,7 +581,7 @@ object Dedup {
     * value oracle. Build and probe are Spark's OWN native Bloom
     * expressions (`BloomFilterAggregate` / `BloomFilterMightContain`,
     * the machinery behind its runtime row-level filters, surfaced as
-    * temp functions by GraftFunctions) — fully codegen'd partial
+    * functions by [[graft.GraftExtensions]]) — fully codegen'd partial
     * aggregation on the build, a codegen'd binary-literal probe on
     * the scan side; no Scala UDF anywhere on the path. The filter
     * bytes cross the driver once (an O(bits) scalar fetch, exactly
@@ -592,7 +590,6 @@ object Dedup {
     * any other deterministic filter. */
   def contaminationHitsBloom(train: DataFrame, bench: DataFrame,
                              fpp: Double = 0.01): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(train.sparkSession)
     val nBench = bench.count()
     if (nBench == 0L)
       return contaminationHits(train, bench.limit(0))
@@ -610,7 +607,6 @@ object Dedup {
   /** SimHash per doc over word tokens: bit j of the signature is the
     * sign of the tf-weighted sum of bit j across token hashes. */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
     val words = docs.select(col("doc_id"),
       explode(split(col("text"), " ")).as("w"))
       .select(col("doc_id"), call_function("graft_hash", col("w")).as("h"))

@@ -219,7 +219,6 @@ object ExtCurationQueries {
     // ≥0.45 contamination flag, so the cut threshold is auditable
     // rather than silently applied.
     "q_semantic_decontaminate" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d).select(col("vec_id"), col("embedding"))
       val bench = e.where(col("vec_id") % 20 === 0)
         .select(col("vec_id").as("bench_id"), col("embedding").as("bvec"),
@@ -283,7 +282,6 @@ object ExtCurationQueries {
     // broadcast-vs-scan rounds; the oracle replays every round's
     // argmin and the final assignment.
     "q_coreset_kcenter" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d).select(col("vec_id"), col("embedding"))
       val centers = VectorSearch.kcenterCoreset(e, 8, s"kcenter8:$d")
       val en = e.withColumn("nrm",
@@ -1017,7 +1015,6 @@ object ExtCurationQueries {
     // (fixed-point math); the oracle CTE chain below replays the
     // assignment/probe/scan stages in DuckDB.
     "q_ann_ivf" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d)
       // r17: centroids and the corpus assignment (the inverted file)
       // are session artifacts now — every action re-ran the

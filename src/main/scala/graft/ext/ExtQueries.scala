@@ -435,7 +435,6 @@ object ExtQueries {
     * lists once and serves probes against them. */
   private[ext] def ivfLabelAssignC(s: SparkSession, d: String): DataFrame =
     Cache.getOrPersist(s, "ivf_label_assign", d) {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val cellsB = broadcast(labelCellsC(s, d)
         .select(col("label").cast("long").as("cell_id"), col("centroid"),
           VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
@@ -754,7 +753,6 @@ object ExtQueries {
   private[ext] def knnPerProbe(s: SparkSession, d: String): DataFrame =
     Cache.getOrSnapshot(s, "knn_per_probe", d) {
       import org.apache.spark.sql.expressions.Window
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d).select(col("vec_id"), col("embedding"),
         col("label").cast("long").as("label"))
       val probes = annPanelC(s, d)
@@ -2087,7 +2085,6 @@ object ExtQueries {
 
     // Position-weighted rolling-hash fingerprint (native hash expr).
     "q_doc_fingerprint" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       docs(s, d).select(col("doc_id"),
         TextAnalysis.fingerprint(split(col("text"), " "),
           w => call_function("graft_hash", w)).as("fp"))

@@ -150,7 +150,6 @@ object ExtServingQueries {
     // the accepted cost — the acceptance pair for that is the recall
     // family.)
     "q_ann_incremental" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d)
       val base = e.where(col("vec_id") % 10 =!= 9)
       val delta = e.where(col("vec_id") % 10 === 9)
@@ -206,7 +205,6 @@ object ExtServingQueries {
     // the IVF/IVF-PQ/SQ recall triptych.
     "q_ann_filtered_recall" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.expr.GraftFunctions.ensureRegistered(s)
       lazy val e = emb(s, d).select(col("vec_id"), col("embedding"),
         col("label"))
       lazy val cells = Cache.getOrPersist(s, "kmeans_cells_8_2", d)(
@@ -820,7 +818,6 @@ object ExtServingQueries {
     // 100× this size. Ties break on vec_id (negated inside the max
     // struct so both extremes prefer the smaller id).
     "q_triplet_mining" -> ((s, d) => {
-      graft.expr.GraftFunctions.ensureRegistered(s)
       val e = emb(s, d).select(col("vec_id"), col("embedding"),
         col("label").cast("long").as("label"))
       // probes ride the fixed acceptance panel — this probes×corpus

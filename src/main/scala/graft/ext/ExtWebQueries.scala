@@ -202,7 +202,6 @@ object ExtWebQueries {
           all.where(col("doc_id") % 5 =!= 4)
             .select(col("canon_url")).distinct())
         val incoming = all.where(col("doc_id") % 5 === 4)
-        graft.expr.GraftFunctions.ensureRegistered(s)
         val (nPrior, bfOpt) = urlSeenMemo.getOrElseUpdate(
           (graft.core.Cache.sessionKey(s), d), {
             val n = prior.count()

@@ -105,8 +105,8 @@ object TextAnalysis {
     * portable token hashes mod 1e9+7. Order-sensitive (a permuted doc
     * fingerprints differently) yet engine-neutral and exact.
     * `h` defaults to the composed-Column hash (works on any session);
-    * callers that registered GraftFunctions pass the native
-    * expression for the codegen'd fast path. */
+    * callers on a [[graft.GraftExtensions]] session pass the native
+    * `graft_hash` for the codegen'd fast path. */
   def fingerprint(ws: Column,
                   h: Column => Column = PortableHash.h): Column =
     aggregate(

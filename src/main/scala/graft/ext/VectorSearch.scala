@@ -37,8 +37,8 @@ object VectorSearch {
   /** Exact fixed-point dot product via the native codegen'd
     * [[graft.expr.FixedDotExpr]] (bit-identical to [[fixedDotHof]],
     * asserted in ExprSpec; fused loop, no intermediate array).
-    * Callers' sessions need [[graft.expr.GraftFunctions]] registered —
-    * every DataFrame entry point here does it. */
+    * Resolves on any session with [[graft.GraftExtensions]] installed
+    * (every [[graft.core.Tuning]] session). */
   def fixedDot(a: Column, b: Column): Column =
     call_function("graft_fixed_dot", a, b) / lit(DotScale)
 
@@ -73,7 +73,6 @@ object VectorSearch {
     * the rounded cosine ASC with vec_id tiebreak (engine-stable). */
   def farthestFromCentroid(emb: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val cents = labelCentroids(emb)
       .withColumn("nrm_c", fixedNormSq(col("centroid")))
     val scored = emb.withColumn("nrm_e", fixedNormSq(col("embedding")))
@@ -93,7 +92,6 @@ object VectorSearch {
   def topKByCosine(emb: DataFrame, probes: DataFrame,
                    probeKey: String, probeVec: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val embN = emb.withColumn("nrm_e", fixedNormSq(col("embedding")))
     val probesN = probes.withColumn("nrm_p", fixedNormSq(col(probeVec)))
     val scored = embN.crossJoin(broadcast(probesN))
@@ -123,7 +121,6 @@ object VectorSearch {
               queryKey: String, queryVec: String,
               k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val cellsB = broadcast(cells.select(col("cell_id"),
       col("centroid"), fixedNormSq(col("centroid")).as("cnrm")))
     val assigned = assignCells(emb, cellsB)
@@ -168,7 +165,6 @@ object VectorSearch {
                           queryVec: String, k: Int, nProbe: Int,
                           scanFilter: Column = lit(true)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(assigned.sparkSession)
     val pw = Window.partitionBy(col(queryKey))
       .orderBy(col("cell_cos").desc, col("cell_id"))
     val probes = queries
@@ -234,7 +230,6 @@ object VectorSearch {
     * nothing in the plan is quadratic in the corpus. */
   def semDedup(emb: DataFrame, cells: DataFrame, tau: Double,
                cap: Int): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val cellsB = broadcast(cells.select(col("cell_id"),
       col("centroid"), fixedNormSq(col("centroid")).as("cnrm")))
     semDedupFromAssigned(assignCells(emb, cellsB), tau, cap)
@@ -478,7 +473,6 @@ object VectorSearch {
     * per-round `localCheckpoint` is on the k-row centroid frame only,
     * keeping the loop's lineage flat. */
   def kmeansCells(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     var cells = emb.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cell_id"),
         transform(col("embedding"), _.cast("double")).as("centroid"))
@@ -673,7 +667,6 @@ object VectorSearch {
                        bands: Int = DefaultBands,
                        bits: Int = DefaultBandBits,
                        cap: Int = DefaultBucketCap): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val cand = bandedCandidates(emb, bands, bits, cap)
     val withN = emb.select(col("vec_id"), col("embedding"),
       fixedNormSq(col("embedding")).as("nrm"))
@@ -788,7 +781,6 @@ object VectorSearch {
                 entryDf: Option[DataFrame] = None,
                 corpusAdj: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val ckptRounds = emb.sparkSession.conf
       .getOption("spark.graft.ann.roundCheckpoint").contains("true")
     def trunc(df: DataFrame): DataFrame =
@@ -861,7 +853,6 @@ object VectorSearch {
     * _shared:knn_graph build); a production deployment persists it —
     * it IS the navigable index. */
   def corpusWithAdj(graph: DataFrame, emb: DataFrame): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val adj = graph.groupBy(col("v"))
       .agg(sort_array(collect_list(col("n"))).as("ns"))
       .withColumnRenamed("v", "vec_id")
@@ -934,7 +925,6 @@ object VectorSearch {
   def kcenterCoreset(emb: DataFrame, k: Int, memoKey: String): Seq[Long] =
     kcenterMemo.getOrElseUpdate(
       (emb.sparkSession.sparkContext.applicationId, memoKey), {
-        graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
         val e = emb.select(col("vec_id"), col("embedding"),
           fixedNormSq(col("embedding")).as("nrm"))
         var centers = Seq(e.agg(min(col("vec_id"))).head().getLong(0))
@@ -1002,7 +992,6 @@ object VectorSearch {
   /** [[sqDequantized]] against a loaded quantizer — the serve path of
     * a persisted SQ index. */
   def sqDequantizedWith(emb: DataFrame, stats: DataFrame): DataFrame = {
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     codedDimsWith(emb, stats)
       .groupBy(col("vec_id"))
       .agg(transform(
@@ -1019,7 +1008,6 @@ object VectorSearch {
   def sqRerank(cand: DataFrame, emb: DataFrame, queryKey: String,
                k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expr.GraftFunctions.ensureRegistered(emb.sparkSession)
     val dq = sqDequantized(emb)
     val qdq = dq.select(col("vec_id").as(queryKey),
       col("dqvec").as("qdq"), col("dqn").as("qn"))

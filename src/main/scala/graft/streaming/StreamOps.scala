@@ -358,7 +358,6 @@ object StreamOps {
   def bandMinsWholeDoc(docs: DataFrame, n: Int = 3): DataFrame = {
     import graft.core.PortableHash
     import graft.ext.Dedup
-    graft.expr.GraftFunctions.ensureRegistered(docs.sparkSession)
     val ws = split(col("text"), " ")
     val sh = transform(
       sequence(lit(1), size(ws) - lit(n - 1)),

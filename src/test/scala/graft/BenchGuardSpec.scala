@@ -90,4 +90,16 @@ class BenchGuardSpec extends AnyFunSuite {
     // a plausible shared build: r12–r14 measured 49–140 s
     assert(got.get._1 > 5.0 && got.get._1 < 500.0, got)
   }
+
+  test("Verify.costOrder reads BENCH_FULL.json from the given dir; " +
+    "a missing or unparseable record gives an empty map") {
+    val d = tmpDir()
+    assert(Verify.costOrder(d) === Map.empty)
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"metric":"total","queries":{"q_a":0.25,"q_b":1.5e1},"x":1}""")
+    assert(Verify.costOrder(d) === Map("q_a" -> 0.25, "q_b" -> 15.0))
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"queries":{"q_a":1.2.3}""")
+    assert(Verify.costOrder(d) === Map.empty)
+  }
 }

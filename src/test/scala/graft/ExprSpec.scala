@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.PortableHash
-import graft.expr.GraftFunctions
 
 /** The native hash expression must be bit-identical to the composed
   * Column formula (whose arithmetic the DuckDB oracles spell out). */
@@ -10,7 +9,6 @@ class ExprSpec extends SparkSpec {
   import spark.implicits._
 
   test("native graft_hash equals the composed formula on corpus shingles") {
-    GraftFunctions.ensureRegistered(spark)
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val ws = split(col("text"), " ")
     val sh = docs.where(size(ws) >= 3).select(explode(
@@ -26,7 +24,6 @@ class ExprSpec extends SparkSpec {
 
   test("graft_simhash equals the composed 32-sum declarative form " +
     "on the documents corpus") {
-    GraftFunctions.ensureRegistered(spark)
     val bits = graft.ext.Dedup.SimhashBits
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val words = docs.select(col("doc_id"),
@@ -51,7 +48,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("native graft_hash equals the composed formula on edge strings") {
-    GraftFunctions.ensureRegistered(spark)
     val edge = Seq("", "a", "ab", "abc", "abcd", "abcde", "#", "     ",
       "a a a", "zzzzzzzzzzzzzzzzzzzzzzzz").toDF("s")
     val bad = edge.select(
@@ -62,7 +58,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("graft_hash accumulates in 64-bit: 1 MB strings agree across twins") {
-    GraftFunctions.ensureRegistered(spark)
     // length·5381 alone exceeds 2^31 here — an Int-accumulating twin
     // would wrap (differently from DuckDB) and diverge
     val big = Seq("x" * 1_000_000, "ab" * 300_000, "q" * 399_000).toDF("s")
@@ -81,7 +76,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("graft_hash twins agree on non-ASCII and astral-plane strings") {
-    GraftFunctions.ensureRegistered(spark)
     // BMP accents/CJK and surrogate-pair emoji: Java charAt counts
     // UTF-16 units while Spark length()/substring() count code points
     val uni = Seq("é", "café", "中文abc",
@@ -95,7 +89,6 @@ class ExprSpec extends SparkSpec {
   }
 
   test("native graft_fixed_dot equals the HOF formula on real embeddings") {
-    GraftFunctions.ensureRegistered(spark)
     val e = spark.read.parquet(s"$sf001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val b = e.select(col("vec_id").as("v2"), col("embedding").as("emb2"))
@@ -114,7 +107,6 @@ class ExprSpec extends SparkSpec {
   test("graft_fixed_dot handles double arrays (dequantized vectors)") {
     // sqRerank feeds array<double> reconstructions through the native
     // expression; pin the type path and the exact fixed-point result
-    GraftFunctions.ensureRegistered(spark)
     val r = Seq((Array(0.25, -1.5, 3.0), Array(2.0, 0.5, -0.125)))
       .toDF("a", "b")
       .select(
@@ -127,38 +119,72 @@ class ExprSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the native functions via spark.sql.extensions") {
-    import org.apache.spark.sql.SparkSession
-    val orig = spark // force the shared lazy session to exist first
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      // reuses the existing SparkContext. The spark.sql.extensions conf
-      // is STATIC (read from the SparkContext conf at context creation),
-      // so on a shared test context the programmatic withExtensions
-      // route exercises the same injector.
-      val s2 = SparkSession.builder()
-        .master("local[2]") // SparkContext.getOrCreate reuses the live context
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
-      assert(s2 ne orig)
-      val r = s2.sql(
-        """SELECT graft_hash('spark') AS h,
-          |       graft_fixed_dot(array(CAST(1.0 AS FLOAT)),
-          |                       array(CAST(2.0 AS FLOAT))) AS d""".stripMargin)
-        .collect()(0)
-      assert(r.getInt(0) === graft.expr.PortableHashImpl.compute(
-        org.apache.spark.unsafe.types.UTF8String.fromString("spark")))
-      assert(r.getLong(1) === 2000000000000L) // 1·2 in 1e-12 units
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    // nothing registers anything: the functions must come from the
+    // spark.sql.extensions entry in Tuning.SessionDefaults, so a new
+    // session has all six and queries never re-register one
+    val s2 = spark.newSession()
+    val bloom = s2.sql("SELECT graft_bloom_agg(xxhash64(v), 3L, 1024L) " +
+      "FROM VALUES ('a'), ('b'), ('c') AS t(v)").head().getAs[Array[Byte]](0)
+    val hex = bloom.map(b => f"${b & 0xff}%02X").mkString
+    val r = s2.sql(
+      s"""SELECT graft_hash('spark'),
+         |       graft_fixed_dot(array(CAST(1.0 AS FLOAT)),
+         |                       array(CAST(2.0 AS FLOAT))),
+         |       graft_might_contain(X'$hex', xxhash64('b'))""".stripMargin)
+      .head()
+    assert(r.getInt(0) === graft.expr.PortableHashImpl.compute(
+      org.apache.spark.unsafe.types.UTF8String.fromString("spark")))
+    assert(r.getLong(1) === 2000000000000L) // 1·2 in 1e-12 units
+    assert(r.getBoolean(2))
+    // (score desc, tie asc) top-2 per group, a short group kept whole
+    val tk = s2.sql(
+      """SELECT g, graft_topk(2, score, tie, extra) AS tk
+        |FROM VALUES (1, 0.5D, 3L, 30L), (1, 0.9D, 1L, 10L),
+        |            (1, 0.5D, 2L, 20L), (2, 0.1D, 7L, 70L)
+        |  AS t(g, score, tie, extra)
+        |GROUP BY g""".stripMargin)
+      .collect().map(row => row.getInt(0) -> row.getSeq[org.apache.spark.sql.Row](1)
+        .map(e => (e.getDouble(0), e.getLong(1), e.getLong(2)))).toMap
+    assert(tk === Map(1 -> Seq((0.9, 1L, 10L), (0.5, 2L, 20L)),
+      2 -> Seq((0.1, 7L, 70L))))
+    // bit j set iff more hashes have it than not; h = -1 sets every bit
+    // of a Dedup.SimhashBits-wide signature
+    val sh = s2.sql(
+      """SELECT d, graft_simhash(h) FROM VALUES (1, 1), (1, 3), (2, 2),
+        |  (3, -1) AS t(d, h) GROUP BY d""".stripMargin)
+      .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
+    assert(sh === Map(1 -> 1L, 2 -> 2L,
+      3 -> ((1L << graft.ext.Dedup.SimhashBits) - 1)))
+
+    val registry = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[Logger]
+    val replaced = new java.util.concurrent.atomic.AtomicInteger(0)
+    val appender = new AbstractAppender("graft-replaced", null, null,
+        true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage
+            .contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
     }
+    appender.start()
+    registry.addAppender(appender)
+    try {
+      // the registry's warnings reach the appender
+      assert(registry.isEnabled(Level.WARN))
+      Seq("q_simhash_near_dup", "q_ann_ivf").foreach(q =>
+        SparkEntry.queries(q)(s2, sf001).count())
+    } finally {
+      registry.removeAppender(appender)
+      appender.stop()
+    }
+    assert(replaced.get === 0)
   }
 
   test("graft_hash is callable from SQL after registration") {
-    GraftFunctions.ensureRegistered(spark)
     val v = spark.sql("SELECT graft_hash('spark')").collect()(0).getInt(0)
     assert(v >= 0 && v < PortableHash.M)
   }

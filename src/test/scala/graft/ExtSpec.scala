@@ -372,7 +372,6 @@ class ExtSpec extends SparkSpec {
     // the pre-filter really prunes: at fpp=0.01 the 9 non-matching
     // train shingles cannot ALL be false positives. Probe with the
     // same native build/probe pair the production path uses.
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val nBench = bench.count()
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(nBench, 0.01)
@@ -541,7 +540,6 @@ class ExtSpec extends SparkSpec {
   }
 
   test("fixed-point dot product is exact and fold-order-free") {
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b")
     val r = df.select(
@@ -875,7 +873,6 @@ class ExtSpec extends SparkSpec {
       (1L, Array(0.0, 1.0, 0.0, 0.0)),
       (2L, Array(0.0, 0.0, 0.0, 1.0)))
       .toDF("cell_id", "centroid")
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     val assigned = VectorSearch.assignCells(emb, broadcast(
       cells.select(col("cell_id"), col("centroid"),
         VectorSearch.fixedNormSq(col("centroid")).as("cnrm"))))

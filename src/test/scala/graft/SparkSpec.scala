@@ -27,13 +27,9 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.core.Tuning.defaults(SparkSession.builder()
-      .master("local[4]"))
+    val s = graft.core.Tuning.builder()
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

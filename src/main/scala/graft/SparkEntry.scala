@@ -21,45 +21,18 @@ object SparkEntry {
       rel.RelStatsQueries.queries ++
       ext.ExtQueries.queries
 
-  /** Force all session-shared intermediates (bucketed ratings table,
-    * pair moments, shingles, LSH candidates). Bench times this as its
-    * own `_shared_build` line so per-query numbers are stable no
-    * matter which query runs first; Verify/driver runs need not call
-    * it — the first consuming query triggers the same builds.
-    *
-    * The three chains (ratings→moments, shingles→minhash candidates,
-    * simhash pairs) are independent, so they run as concurrent Spark
-    * jobs: none of them saturates 32 cores alone (each has narrow
-    * stages and a single-digit-partition tail), and overlapping them
-    * cuts the build wall time — the same reason a cluster deployment
-    * materializes independent tables from one driver with parallel
-    * job submission. Cache keys are disjoint per chain, so the
-    * per-key memoization stays race-free. */
-  def warmShared(spark: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val chains = sharedComponents.map { case (_, f) =>
-      Future(f(spark, dir))
-    }
-    chains.foreach(Await.result(_, Duration.Inf))
-  }
-
   /** The session-shared snapshot builders, NAMED — Bench times each
     * under its own `_shared:<name>` line (serially, for attribution)
     * so first-touch snapshot costs never land on whichever query
     * happens to run first in a cold sweep (VERDICT r10: the four
     * ">2× band" cold outliers were all un-named first-touch builds).
-    * Components are pairwise independent (disjoint Cache keys), so
-    * [[warmShared]] may still overlap them for wall time. */
+    * Verify/driver runs need not call them — the first consuming
+    * query triggers the same builds through [[graft.core.Cache]]. */
   def sharedComponents: Seq[(String, (SparkSession, String) => Unit)] =
     Seq(
       // FIRST: the scan-parallelism relayout (io.Relayout) — every
       // other component consumes the split copies, so its write cost
       // must land on its own row, not on whichever chain runs first.
-      // (warmShared's concurrent chains are still safe: Relayout.path
-      // memoizes per (session, dir, table) with computeIfAbsent, so a
-      // racing first touch blocks until the copy is written.)
       "relayout" -> ((s, d) => graft.io.Relayout.warm(s, d)),
       "sim" -> ((s, d) => rel.SimQueries.warm(s, d)),
       "minhash" -> ((s, d) => ext.ExtQueries.warmMinhash(s, d)),

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions.broadcast
 object Broadcasts {
   val DefaultMaxRows = 10000000L // ~160 MB serialized for two longs
 
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-
   def maxRows(df: DataFrame, confKey: String,
               default: Long = DefaultMaxRows): Long =
     df.sparkSession.conf.getOption(confKey).map(_.toLong).getOrElse(default)
@@ -24,6 +21,13 @@ object Broadcasts {
   def gated(df: DataFrame, confKey: String,
             default: Long = DefaultMaxRows): DataFrame =
     if (df.count() <= maxRows(df, confKey, default)) broadcast(df) else df
+
+  /** The bare memoized count (same memo as [[gatedMemo]]): for
+    * queries that need a dictionary's cardinality as a scalar (a
+    * modulus for hash-probing, a gate bound) without paying a count
+    * job per declaration. Same key-hygiene contract. */
+  def countOnce(df: DataFrame, memoKey: String): Long =
+    Cache.memo(df.sparkSession, "Broadcasts.count", memoKey)(df.count())
 
   /** [[gated]] with the count memoized per (session, memoKey): for
     * gate sides that are rebuilt identically on every call (an item
@@ -35,18 +39,9 @@ object Broadcasts {
     * caller owns key hygiene: the key must pin down the data (include
     * the dir / fit instance), or a stale count will gate a different
     * frame. */
-  /** The bare memoized count (same memo as [[gatedMemo]]): for
-    * queries that need a dictionary's cardinality as a scalar (a
-    * modulus for hash-probing, a gate bound) without paying a count
-    * job per declaration. Same key-hygiene contract. */
-  def countOnce(df: DataFrame, memoKey: String): Long =
-    countMemo.getOrElseUpdate(
-      (Cache.sessionKey(df.sparkSession), memoKey), df.count())
-
   def gatedMemo(df: DataFrame, confKey: String, memoKey: String,
                 default: Long = DefaultMaxRows): DataFrame = {
-    val n = countMemo.getOrElseUpdate(
-      (Cache.sessionKey(df.sparkSession), memoKey), df.count())
+    val n = countOnce(df, memoKey)
     if (n <= maxRows(df, confKey, default)) broadcast(df) else df
   }
 }

@@ -1,31 +1,80 @@
 package graft.core
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped materialized intermediates.
+/** The engine's one session memo, and the cleanup that ends it.
   *
   * The query inventory is a set of independent entry points, but many
   * share expensive sub-plans (the ratings view, the pairwise moment
-  * table, the shingle/LSH tables). A real engine materializes such
-  * shared intermediates once per session; this registry does exactly
-  * that with `persist(MEMORY_AND_DISK)` — spill-safe, and keyed by
-  * (session, dir, name) so tests/verify/bench sessions never mix.
+  * table, the shingle/LSH tables) and small driver-side facts (a
+  * count, a vocabulary, a relayout path). A real engine builds such
+  * shared intermediates once per session; [[memo]] does exactly that,
+  * keyed by (session, name, key) so tests/verify/bench sessions never
+  * mix, and [[getOrPersist]] / [[getOrSnapshot]] are the two DataFrame
+  * shapes over it. Every entry of a session is dropped when its
+  * SparkContext stops, and the session's on-disk artifacts (relayout
+  * copies, bucketed tables, checkpoint snapshots) are deleted then
+  * through [[atSessionEnd]].
   *
   * At 100 TB the equivalent is a lifecycle-managed cached table (or a
-  * bucketed materialized view); MEMORY_AND_DISK keeps the local[32]
+  * bucketed materialized view); MEMORY_AND_DISK keeps the local
   * behavior honest — data larger than executor memory spills instead
   * of OOMing.
   */
 object Cache {
-  private val store = TrieMap.empty[(String, String), DataFrame]
+  /** A memo cell: claimed in the map, built outside the map's bin lock
+    * under the cell's own lock. So a build may call [[memo]] for
+    * another key, racing callers of one key wait for the single build,
+    * and a build that throws leaves the cell empty for the next
+    * caller's build. */
+  private final class Cell { @volatile var value: Option[Any] = None }
+
+  private val cells = new ConcurrentHashMap[(String, String), Cell]
+  private val cleanups =
+    new ConcurrentHashMap[String, ConcurrentLinkedQueue[() => Unit]]
 
   /** Session memo key: applicationId is unique per SparkContext and is
-    * never reused the way a GC'd session's identity hash can be — the
-    * uniform key for every session-scoped memo in the engine. */
+    * never reused the way a GC'd session's identity hash can be. */
   def sessionKey(spark: SparkSession): String =
     spark.sparkContext.applicationId
+
+  /** Build `name` for `key` once per session and return it on every
+    * later call; a build that throws stores nothing, so the next call
+    * builds again. One name holds one value type. */
+  def memo[A](spark: SparkSession, name: String, key: String)(build: => A): A = {
+    val app = sessionKey(spark)
+    sessionCleanups(spark, app)
+    val cell = cells.computeIfAbsent((app, s"$name:$key"), _ => new Cell)
+    if (cell.value.isEmpty) cell.synchronized {
+      if (cell.value.isEmpty) cell.value = Some(build)
+    }
+    cell.value.get.asInstanceOf[A]
+  }
+
+  /** Run `f` when this session's SparkContext stops (`spark.stop()`,
+    * or Spark's own shutdown hook at JVM exit), after its memo entries
+    * are dropped. */
+  def atSessionEnd(spark: SparkSession)(f: => Unit): Unit = {
+    sessionCleanups(spark, sessionKey(spark)).add(() => f)
+    ()
+  }
+
+  /** The app's cleanup queue; the first touch registers the one
+    * listener that ends the app's entries and runs its cleanups. */
+  private def sessionCleanups(spark: SparkSession, app: String) =
+    cleanups.computeIfAbsent(app, _ => {
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          cells.keySet.removeIf(_._1 == app)
+          Option(cleanups.remove(app)).foreach(_.forEach(_()))
+        }
+      })
+      new ConcurrentLinkedQueue[() => Unit]
+    })
 
   /** Build `name` once per (session, dir) and `persist` it.
     *
@@ -39,12 +88,7 @@ object Cache {
     * instead. */
   def getOrPersist(spark: SparkSession, name: String, dir: String)
                   (build: => DataFrame): DataFrame =
-    store.getOrElseUpdate(
-      (sessionKey(spark), s"$name:$dir"), {
-        val df = build
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        df
-      })
+    memo(spark, name, dir)(build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** [[getOrPersist]] plus LINEAGE TRUNCATION — for artifacts whose
     * build plan carries broadcast/shuffle stages below them. A
@@ -64,33 +108,19 @@ object Cache {
     * `spark.graft.checkpoint.dir` when that conf points at
     * fault-tolerant storage — which is also the 100 TB shape: a
     * session-lifecycle materialized view, readable with full scan
-    * parallelism, surviving any executor. */
+    * parallelism, surviving any executor. The snapshot is deleted
+    * when the session ends. */
   def getOrSnapshot(spark: SparkSession, name: String, dir: String)
                    (build: => DataFrame): DataFrame =
-    store.getOrElseUpdate(
-      (sessionKey(spark), s"$name:$dir"), {
-        val df = build
-        spark.conf.getOption("spark.graft.checkpoint.dir") match {
-          case Some(base) =>
-            val path = s"$base/cache-$name-${java.util.UUID.randomUUID()}"
-            df.write.mode("overwrite").parquet(path)
-            // session-lifecycle artifact: without cleanup, every
-            // session with the conf set leaks one dir per memo key
-            // and a long-lived host's checkpoint dir grows without
-            // bound. Best-effort delete at JVM exit — a production
-            // deployment instead manages the dir with a TTL policy.
-            deleteOnExit(path)
-            spark.read.parquet(path)
-          case None => df.localCheckpoint(eager = true)
-        }
-      })
-
-  private def deleteOnExit(path: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
+    memo(spark, name, dir) {
+      val df = build
+      spark.conf.getOption("spark.graft.checkpoint.dir") match {
+        case Some(base) =>
+          val path = s"$base/cache-$name-${java.util.UUID.randomUUID()}"
+          df.write.mode("overwrite").parquet(path)
+          atSessionEnd(spark)(FileUtils.deleteQuietly(new java.io.File(path)))
+          spark.read.parquet(path)
+        case None => df.localCheckpoint(eager = true)
       }
-      try rm(new java.io.File(path)) catch { case _: Throwable => () }
-    }))
+    }
 }

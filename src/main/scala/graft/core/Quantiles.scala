@@ -1,6 +1,5 @@
 package graft.core
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -24,8 +23,6 @@ import org.apache.spark.storage.StorageLevel
   *    (`score >= threshold`) engine-portable.
   */
 object Quantiles {
-  private val memo = TrieMap.empty[(String, String), Seq[Double]]
-
   /** (n, values at the requested 0-based global ranks) of the sorted
     * column — three small fully-parallel jobs: sort, per-partition
     * counts (inside zipWithIndex), indexed extract of only the
@@ -93,8 +90,7 @@ object Quantiles {
     * key must pin down (dir, column, fs). */
   def valuesAtFractionsMemo(df: DataFrame, c: String, fs: Seq[Double],
                             memoKey: String): Seq[Double] =
-    memo.getOrElseUpdate(
-      (Cache.sessionKey(df.sparkSession), memoKey),
+    Cache.memo(df.sparkSession, "Quantiles.fractions", memoKey)(
       valuesAtFractions(df, c, fs))
 
   /** [[exactQuantiles]] memoized per (session, key): the envelope is a
@@ -103,14 +99,12 @@ object Quantiles {
     * caller's key must pin down (dir, column, ps). */
   def exactQuantilesMemo(df: DataFrame, c: String, ps: Seq[Double],
                          memoKey: String): Seq[Double] =
-    memo.getOrElseUpdate(
-      (Cache.sessionKey(df.sparkSession), memoKey),
+    Cache.memo(df.sparkSession, "Quantiles.exact", memoKey)(
       exactQuantiles(df, c, ps))
 
   /** [[valueAtFraction]] memoized per (session, key). */
   def valueAtFractionMemo(df: DataFrame, c: String, f: Double,
                           memoKey: String): Double =
-    memo.getOrElseUpdate(
-      (Cache.sessionKey(df.sparkSession), memoKey),
-      Seq(valueAtFraction(df, c, f))).head
+    Cache.memo(df.sparkSession, "Quantiles.fraction", memoKey)(
+      valueAtFraction(df, c, f))
 }

@@ -1,6 +1,5 @@
 package graft.ext
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -60,23 +59,16 @@ object Bpe {
     * chunk audit checks against. */
   val BpeBudget = 128
 
-  private val memo =
-    TrieMap.empty[(String, String), Seq[(String, String)]]
-  private val memoBytes =
-    TrieMap.empty[(String, String), Seq[(String, String)]]
-
   /** The learned merge table for a corpus dir, memoized per
     * (session, dir) — learning collects ≤[[VocabCap]] rows once. */
   def mergesMemo(docs: DataFrame, dir: String): Seq[(String, String)] =
-    memo.getOrElseUpdate(
-      (graft.core.Cache.sessionKey(docs.sparkSession), dir),
+    graft.core.Cache.memo(docs.sparkSession, "Bpe.merges", dir)(
       learnMerges(docs))
 
   /** The BYTE-level merge table ([[learnMergesBytes]]), memoized like
     * [[mergesMemo]]. */
   def mergesBytesMemo(docs: DataFrame, dir: String): Seq[(String, String)] =
-    memoBytes.getOrElseUpdate(
-      (graft.core.Cache.sessionKey(docs.sparkSession), dir),
+    graft.core.Cache.memo(docs.sparkSession, "Bpe.mergesBytes", dir)(
       learnMergesBytes(docs))
 
   /** Merge one pair left-to-right, non-overlapping — the exact

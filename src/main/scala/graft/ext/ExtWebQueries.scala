@@ -202,18 +202,18 @@ object ExtWebQueries {
           all.where(col("doc_id") % 5 =!= 4)
             .select(col("canon_url")).distinct())
         val incoming = all.where(col("doc_id") % 5 === 4)
-        val (nPrior, bfOpt) = urlSeenMemo.getOrElseUpdate(
-          (graft.core.Cache.sessionKey(s), d), {
-            val n = prior.count()
-            if (n == 0L) (0L, None)
-            else {
-              val numBits = org.apache.spark.util.sketch.BloomFilter
-                .optimalNumOfBits(n, 0.01)
-              (n, Some(prior.agg(call_function("graft_bloom_agg",
-                  xxhash64(col("canon_url")), lit(n), lit(numBits)))
-                .head().getAs[Array[Byte]](0)))
-            }
-          })
+        // (the digest is O(bits) and broadcast-sized)
+        val (nPrior, bfOpt) = graft.core.Cache.memo(s, "url_seen_bloom", d) {
+          val n = prior.count()
+          if (n == 0L) (0L, None)
+          else {
+            val numBits = org.apache.spark.util.sketch.BloomFilter
+              .optimalNumOfBits(n, 0.01)
+            (n, Some(prior.agg(call_function("graft_bloom_agg",
+                xxhash64(col("canon_url")), lit(n), lit(numBits)))
+              .head().getAs[Array[Byte]](0)))
+          }
+        }
         val seen =
           if (nPrior == 0L) incoming.limit(0)
             .select(col("doc_id"), lit(1L).as("seen"))
@@ -228,12 +228,6 @@ object ExtWebQueries {
           .orderBy(col("doc_id"))
       }),
     )
-
-  /** (seen-set size, Bloom digest) per (session, dir) — the shared-
-    * artifact memo q_url_seen reads (same discipline as SimQueries'
-    * maxItemsMemo; the digest is O(bits) and broadcast-sized). */
-  private val urlSeenMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Long, Option[Array[Byte]])]
 
   /** The five page-wrapper literals (single-quoted SQL safe: the
     * fixture HTML uses only double quotes). MUST stay byte-identical

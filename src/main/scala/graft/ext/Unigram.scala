@@ -1,7 +1,5 @@
 package graft.ext
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,28 +57,22 @@ object Unigram {
       .select(expr("substring(word, i, k)").as("piece"), col("cnt"))
       .groupBy(col("piece")).agg(sum(col("cnt")).as("freq"))
 
-  private val costMemoMap =
-    TrieMap.empty[(String, String), Map[String, Long]]
-
   /** The broadcastable piece-cost model: chars ∪ top-SubCap longer
     * substrings, costs in integer log2 fixed point. Collected once
     * per (session, dir) — bounded by the cap, not the corpus. */
-  def costMemo(docs: DataFrame, dir: String): Map[String, Long] = {
-    val s = docs.sparkSession
-    costMemoMap.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val pf = pieceFreqs(wordCounts(docs))
-        val chars = pf.where(length(col("piece")) === 1)
-        val subs = pf.where(length(col("piece")) >= 2)
-          .orderBy(col("freq").desc, col("piece")).limit(SubCap)
-        val vocab = chars.unionByName(subs)
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val t = vocab.map(_._2).sum
-        val lt = LmScore.log2FxLong(t)
-        vocab.map { case (p, f) => p -> (lt - LmScore.log2FxLong(f)) }
-          .toMap
-      })
-  }
+  def costMemo(docs: DataFrame, dir: String): Map[String, Long] =
+    graft.core.Cache.memo(docs.sparkSession, "Unigram.cost", dir) {
+      val pf = pieceFreqs(wordCounts(docs))
+      val chars = pf.where(length(col("piece")) === 1)
+      val subs = pf.where(length(col("piece")) >= 2)
+        .orderBy(col("freq").desc, col("piece")).limit(SubCap)
+      val vocab = chars.unionByName(subs)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val t = vocab.map(_._2).sum
+      val lt = LmScore.log2FxLong(t)
+      vocab.map { case (p, f) => p -> (lt - LmScore.log2FxLong(f)) }
+        .toMap
+    }
 
   /** Viterbi over one word: (path cost, n_pieces, 'a|bc|d' pieces).
     * k runs DESCENDING with strictly-better (cost, n_pieces)

@@ -763,17 +763,14 @@ object VectorSearch {
     * rows — every beam member was scored in the round that admitted
     * it, and rescoring is deterministic).
     *
-    * Per-round localCheckpoints are now OFF by default: the r16
-    * negative result (removal = 2–4× slower) was caused by the old
-    * round plan referencing the previous beam TWICE (the union leg
-    * and the graph-expand broadcast), which compounded the replay per
-    * round; the array state is referenced exactly ONCE per round, so
-    * the un-truncated plan is linear and the checkpoints were pure
-    * overhead — measured at sf0.1 warm: q_ann_hnsw 3.7 → 2.3 s,
-    * l1-only serve 1.7 → 0.8 s with checkpoints off on the new shape.
-    * `spark.graft.ann.roundCheckpoint=true` restores them (a cluster
-    * deploy that wants lineage cut per round for fault-recovery
-    * bounds sets it, at ~0.1 s per round of driver-action cost). */
+    * The rounds take no per-round localCheckpoint: the r16 negative
+    * result (removal = 2–4× slower) was caused by the old round plan
+    * referencing the previous beam TWICE (the union leg and the
+    * graph-expand broadcast), which compounded the replay per round;
+    * the array state is referenced exactly ONCE per round, so the
+    * un-truncated plan is linear and per-round checkpoints are pure
+    * overhead on this plan — measured at sf0.1 warm: q_ann_hnsw
+    * 3.7 → 2.3 s, l1-only serve 1.7 → 0.8 s without them. */
   def graphTopK(graph: DataFrame, emb: DataFrame, queries: DataFrame,
                 queryKey: String, queryVec: String, k: Int,
                 beam: Int = GraphBeam, rounds: Int = GraphRounds,
@@ -781,10 +778,6 @@ object VectorSearch {
                 entryDf: Option[DataFrame] = None,
                 corpusAdj: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ckptRounds = emb.sparkSession.conf
-      .getOption("spark.graft.ann.roundCheckpoint").contains("true")
-    def trunc(df: DataFrame): DataFrame =
-      if (ckptRounds) df.localCheckpoint(true) else df
     // the serving structure: corpus rows with their adjacency arrays.
     // Session callers pass the snapshot ([[corpusWithAdj]] warmed under
     // _shared:knn_graph); ad-hoc callers (persisted-index serves,
@@ -826,14 +819,14 @@ object VectorSearch {
         qn.crossJoin(broadcast(entry))
           .select(col(queryKey), col(queryVec), col("qnrm"), col("vec_id"))
     }
-    var state = trunc(round(entryCand))
+    var state = round(entryCand)
     for (_ <- 1 to rounds) {
       val cand = state.select(col(queryKey), col(queryVec), col("qnrm"),
         explode(array_distinct(concat(
           transform(col("beam"), b => b.getField("vid")),
           flatten(transform(col("beam"), b => b.getField("ns"))))))
           .as("vec_id"))
-      state = trunc(round(cand))
+      state = round(cand)
     }
     // final top-k from the last beam's scores (identical to rescoring:
     // same rounded expression over the same rows)
@@ -908,9 +901,6 @@ object VectorSearch {
       corpusAdj = corpusAdj0)
   }
 
-  private val kcenterMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[Long]]
-
   /** Greedy k-center (farthest-point) coreset selection — the
     * classic 2-approximation (Gonzalez 1985) that active-learning /
     * coreset pipelines run to pick a maximally-spread data subset:
@@ -923,26 +913,25 @@ object VectorSearch {
     * pipeline, so the selection order is bit-portable and the oracle
     * replays every round. */
   def kcenterCoreset(emb: DataFrame, k: Int, memoKey: String): Seq[Long] =
-    kcenterMemo.getOrElseUpdate(
-      (emb.sparkSession.sparkContext.applicationId, memoKey), {
-        val e = emb.select(col("vec_id"), col("embedding"),
-          fixedNormSq(col("embedding")).as("nrm"))
-        var centers = Seq(e.agg(min(col("vec_id"))).head().getLong(0))
-        for (_ <- 2 to k) {
-          val sel = e.where(col("vec_id").isin(centers: _*))
-            .select(col("vec_id").as("cid"), col("embedding").as("cvec"),
-              col("nrm").as("cnrm"))
-          val next = e.crossJoin(broadcast(sel))
-            .select(col("vec_id"), Det.r4(cosineCol(
-              fixedDot(col("embedding"), col("cvec")),
-              col("nrm"), col("cnrm"))).as("cs"))
-            .groupBy(col("vec_id")).agg(max(col("cs")).as("mc"))
-            .agg(min(struct(col("mc"), col("vec_id"))).as("m"))
-            .select(col("m.vec_id")).head().getLong(0)
-          centers = centers :+ next
-        }
-        centers
-      })
+    graft.core.Cache.memo(emb.sparkSession, "kcenter", memoKey) {
+      val e = emb.select(col("vec_id"), col("embedding"),
+        fixedNormSq(col("embedding")).as("nrm"))
+      var centers = Seq(e.agg(min(col("vec_id"))).head().getLong(0))
+      for (_ <- 2 to k) {
+        val sel = e.where(col("vec_id").isin(centers: _*))
+          .select(col("vec_id").as("cid"), col("embedding").as("cvec"),
+            col("nrm").as("cnrm"))
+        val next = e.crossJoin(broadcast(sel))
+          .select(col("vec_id"), Det.r4(cosineCol(
+            fixedDot(col("embedding"), col("cvec")),
+            col("nrm"), col("cnrm"))).as("cs"))
+          .groupBy(col("vec_id")).agg(max(col("cs")).as("mc"))
+          .agg(min(struct(col("mc"), col("vec_id"))).as("m"))
+          .select(col("m.vec_id")).head().getLong(0)
+        centers = centers :+ next
+      }
+      centers
+    }
 
   /** The quantizer's train+encode core, shared by [[scalarQuantize]]
     * and [[sqDequantized]] so the code/dequantize formulas (which two

@@ -1,7 +1,5 @@
 package graft.ext
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,24 +57,18 @@ object WordPiece {
         col("k"), col("cnt"))
       .groupBy(col("piece"), col("k")).agg(sum(col("cnt")).as("freq"))
 
-  private val vocabMemoMap =
-    TrieMap.empty[(String, String), Set[String]]
-
   /** The broadcastable vocab: both 1-char classes in full, plus the
     * top-SubCap longer pieces. Collected once per (session, dir) —
     * bounded by the cap + alphabet, not the corpus. */
-  def vocabMemo(docs: DataFrame, dir: String): Set[String] = {
-    val s = docs.sparkSession
-    vocabMemoMap.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val pf = pieceFreqs(Unigram.wordCounts(docs))
-        val chars = pf.where(col("k") === 1).select(col("piece"))
-        val subs = pf.where(col("k") >= 2)
-          .orderBy(col("freq").desc, col("piece")).limit(SubCap)
-          .select(col("piece"))
-        chars.unionByName(subs).collect().map(_.getString(0)).toSet
-      })
-  }
+  def vocabMemo(docs: DataFrame, dir: String): Set[String] =
+    graft.core.Cache.memo(docs.sparkSession, "WordPiece.vocab", dir) {
+      val pf = pieceFreqs(Unigram.wordCounts(docs))
+      val chars = pf.where(col("k") === 1).select(col("piece"))
+      val subs = pf.where(col("k") >= 2)
+        .orderBy(col("freq").desc, col("piece")).limit(SubCap)
+        .select(col("piece"))
+      chars.unionByName(subs).collect().map(_.getString(0)).toSet
+    }
 
   /** Greedy longest-match walk over one word: (n_pieces,
     * 'ab|##cd' pieces). Single-char pieces of both classes are

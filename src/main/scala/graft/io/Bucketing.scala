@@ -1,6 +1,6 @@
 package graft.io
 
-import scala.collection.concurrent.TrieMap
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -26,10 +26,8 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  private val memo = TrieMap.empty[(String, String), String]
-
   /** One-time bucketed materialization of a shared intermediate,
-    * memoized per (session, name, dir) like [[graft.core.Cache]] — but
+    * memoized per (session, name, dir) in [[graft.core.Cache.memo]] — but
     * the result is a catalog table, so downstream scans keep the
     * bucket partitioning that `persist()` hides behind an
     * AdaptiveSparkPlan (the negative result recorded in PLANS.md).
@@ -42,13 +40,12 @@ object Bucketing {
   def materializeOnce(spark: SparkSession, name: String, dir: String,
                       by: String, sortCols: Seq[String] = Nil)
                      (build: => DataFrame): DataFrame = {
-    val sessionKey = graft.core.Cache.sessionKey(spark)
-    val table = memo.getOrElseUpdate(
-      (sessionKey, s"$name:$dir"),
+    val table = graft.core.Cache.memo(spark, "Bucketing.table", s"$name:$dir")(
       try {
         val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
         val t = s"graft_${name}_" +
-          sessionKey.replaceAll("[^A-Za-z0-9]", "").toLowerCase + "_" +
+          graft.core.Cache.sessionKey(spark)
+            .replaceAll("[^A-Za-z0-9]", "").toLowerCase + "_" +
           Integer.toHexString(dir.hashCode)
         // the in-memory catalog forgets tables between JVMs but the
         // warehouse dir persists — clear any stale location first
@@ -56,10 +53,9 @@ object Bucketing {
         val wh = spark.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:")
         val loc = new java.io.File(wh, t.toLowerCase)
-        if (loc.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(loc).deleteRecursively()
-        }
+        FileUtils.deleteQuietly(loc)
+        // the table is session-scoped: its files go with the session
+        graft.core.Cache.atSessionEnd(spark)(FileUtils.deleteQuietly(loc))
         writeBucketed(build.repartition(buckets, col(by)), t, buckets, by, sortCols)
         t
       } catch {

@@ -11,42 +11,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the row-group start reads zero rows — so `maxPartitionBytes` cannot
   * raise scan parallelism, and every query's stage 1 (scan + filters +
   * projections + partial aggregation, i.e. the whole plan below the
-  * first Exchange) runs in a SINGLE task on one core of local[32].
+  * first Exchange) runs in a SINGLE task on one core.
   * The shared dedup/LM builds are the worst case: simhash tokenizes
   * and bit-sums the entire document corpus inside that one task.
   *
   * The fix is the same one the bucketed ratings table applies to the
   * self-join shuffle: pay a one-time per-session layout write, then
   * every scan of the table parallelizes. Each fact table is copied
-  * once per (session, dir) into `defaultParallelism` parquet files
-  * under target/relayout/<appId>/ (removed at JVM exit). Row VALUES
-  * are byte-identical parquet round-trips; only file boundaries (and
-  * thus row order, which no query's result depends on — the
-  * determinism contract orders every output by a total key) change.
-  * The copy is rebuilt by every fresh session from the raw inputs —
-  * nothing persists across runs — and Bench bills the build under its
-  * own `_shared:relayout` row so per-query numbers stay attributable.
+  * once per (session, dir) into `min(defaultParallelism, 8)` parquet
+  * files under target/relayout/<appId>/, deleted when the session
+  * ends. Row VALUES are byte-identical parquet round-trips; only file
+  * boundaries (and thus row order, which no query's result depends on
+  * — the determinism contract orders every output by a total key)
+  * change. The copy is rebuilt by every fresh session from the raw
+  * inputs — nothing persists across runs — and Bench bills the build
+  * under its own `_shared:relayout` row so per-query numbers stay
+  * attributable.
   *
   * At 100 TB this module is a NO-OP by construction: a table whose
   * on-disk footprint exceeds `spark.graft.relayout.max.bytes` (default
-  * 1 GiB) or that already ships as at least `defaultParallelism / 2`
-  * files is left alone — real deployments write many ~128 MB row
-  * groups at ingest and already scan wide. The relayout exists to
+  * 1 GiB) or that already ships as at least half that many files is
+  * left alone — real deployments write many ~128 MB row groups at
+  * ingest and already scan wide. The relayout exists to
   * restore, in local single-row-group test mode, the scan parallelism
   * the production layout has natively.
   */
 object Relayout {
-  import java.util.concurrent.ConcurrentHashMap
-
-  /** (appId, dir, name) -> path the session should read. Values may be
-    * the ORIGINAL path (guard skipped or write failed — both logged).
-    * computeIfAbsent, not TrieMap.getOrElseUpdate: the warmShared
-    * chains touch the same table concurrently (docs feeds minhash,
-    * simhash AND lm), and the copy must be written exactly once. */
-  private val memo = new ConcurrentHashMap[(String, String, String), String]
-
-  private def conf(spark: SparkSession, key: String, dflt: String): String =
-    spark.conf.getOption(key).getOrElse(dflt)
 
   /** The single-row-group fact tables worth re-splitting; dimension
     * tables (nation/region/supplier/customer/part) are broadcast-sized
@@ -80,35 +70,35 @@ object Relayout {
       val kids = f.listFiles(); if (kids == null) 0 else kids.map(fileCount).sum
     } else if (f.getName.endsWith(".parquet")) 1 else 0
 
+  /** Split count: enough to engage multiple cores on CPU-bound
+    * stage-1 work without paying per-file open/scheduling cost on
+    * every scan of a 10 MB table (measured r16: 32-way splits made
+    * multi-scan SQL queries ~0.5–1 s SLOWER per action while 8-way
+    * kept the heavy-stage win; see OPTIMIZATION_r16.md). Production
+    * tables ship hundreds of row groups, so this only shapes the
+    * local restore; capped at `defaultParallelism`. */
+  private val MaxSplits = 8
+
   /** Resolve the path scans of `dir/name.parquet` should read: the
     * session's N-way split copy for small single-file fact tables,
-    * the original path otherwise. Writing is memoized per (session,
-    * dir, name) and safe under concurrent first touch. */
+    * the original path otherwise (guard skipped or write failed —
+    * both logged). Writing is memoized per (session, dir, name) in
+    * [[graft.core.Cache.memo]], so a racing first touch waits for the
+    * one copy. */
   def path(spark: SparkSession, dir: String, name: String): String = {
     val raw = s"$dir/$name.parquet"
-    if (!FactTables.contains(name) ||
-        conf(spark, "spark.graft.relayout.enabled", "true") != "true")
-      return raw
-    memo.computeIfAbsent(
-      (graft.core.Cache.sessionKey(spark), dir, name),
-      _ => build(spark, dir, name, raw))
+    if (!FactTables.contains(name)) raw
+    else graft.core.Cache.memo(spark, "Relayout.path", s"$dir/$name")(
+      build(spark, dir, name, raw))
   }
 
   private def build(spark: SparkSession, dir: String, name: String,
                     raw: String): String = {
     val f = new java.io.File(raw)
     if (!f.exists()) return raw
-    val maxBytes =
-      conf(spark, "spark.graft.relayout.max.bytes", (1L << 30).toString).toLong
-    // Split count: enough to engage multiple cores on CPU-bound
-    // stage-1 work without paying per-file open/scheduling cost on
-    // every scan of a 10 MB table (measured r16: 32-way splits made
-    // multi-scan SQL queries ~0.5–1 s SLOWER per action while 8-way
-    // kept the heavy-stage win; see OPTIMIZATION_r16.md). Production
-    // tables ship hundreds of row groups, so this knob only shapes
-    // the local restore.
-    val splits = math.min(spark.sparkContext.defaultParallelism,
-      conf(spark, "spark.graft.relayout.splits", "8").toInt)
+    val maxBytes = spark.conf.getOption("spark.graft.relayout.max.bytes")
+      .fold(1L << 30)(_.toLong)
+    val splits = math.min(spark.sparkContext.defaultParallelism, MaxSplits)
     // the scale guard: a table that is already big or already multi-
     // file scans wide natively — relayout would only burn ingest I/O
     if (sizeOf(f) > maxBytes || fileCount(f) >= math.max(2, splits / 2))
@@ -116,7 +106,8 @@ object Relayout {
     try {
       val base = sys.props.getOrElse("user.dir", ".") +
         s"/target/relayout/${graft.core.Cache.sessionKey(spark)}"
-      registerCleanup(base)
+      graft.core.Cache.atSessionEnd(spark)(
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
       val out = s"$base/${DialectFixtures.leaf(dir)}/$name"
       spark.read.parquet(raw)
         .repartition(splits)
@@ -130,19 +121,6 @@ object Relayout {
         raw
     }
   }
-
-  private val cleanupRegistered = new ConcurrentHashMap[String, Boolean]
-  private def registerCleanup(base: String): Unit =
-    cleanupRegistered.computeIfAbsent(base, _ => {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(); ()
-        }
-        try rm(new java.io.File(base)) catch { case _: Throwable => () }
-      }))
-      true
-    })
 
   /** Force the session's split copies (Bench bills this as its own
     * `_shared:relayout` component so the first consuming query's cold

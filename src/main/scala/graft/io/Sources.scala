@@ -23,29 +23,25 @@ object Sources {
     StructField("item_id", StringType, nullable = false),
     StructField("rating", DoubleType, nullable = false)))
 
-  /** Per-(session, dir, name) memo of the source DataFrames (r17
-    * warm-tail fixed cost): every `spark.read.parquet` call builds a
-    * fresh InMemoryFileIndex (directory listing) and re-reads the
-    * parquet footer for the schema — measured 0.13–1.1 s of the
+  /** One parquet table from a testdata scale-factor dir. Fact tables
+    * route through [[Relayout]] — the session's N-way split copy that
+    * restores scan parallelism over the single-row-group testdata
+    * files (no-op at production layouts; see Relayout scaladoc).
+    *
+    * Memoized per (session, dir, name) in [[graft.core.Cache.memo]]
+    * (r17 warm-tail fixed cost): every `spark.read.parquet` call
+    * builds a fresh InMemoryFileIndex (directory listing) and re-reads
+    * the parquet footer for the schema — measured 0.13–1.1 s of the
     * 0.4 s-median per-action warm floor was this plan-CONSTRUCTION
     * I/O, re-paid by every query invocation (and 11× per
     * `registerTables` call). The memoized value is the unexecuted
     * logical plan (a resolved relation), never rows: results,
     * physical plans and scan pushdown are identical, only the
-    * repeated listing/footer I/O goes away. Keyed like every other
-    * session memo ([[graft.core.Cache.sessionKey]]); a file layout
-    * mutated under a live session is not re-observed — the standing
-    * staleness contract of the relayout/bucketing memos. */
-  private val tableMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), DataFrame]
-
-  /** One parquet table from a testdata scale-factor dir. Fact tables
-    * route through [[Relayout]] — the session's N-way split copy that
-    * restores scan parallelism over the single-row-group testdata
-    * files (no-op at production layouts; see Relayout scaladoc). */
+    * repeated listing/footer I/O goes away. A file layout mutated
+    * under a live session is not re-observed — the standing staleness
+    * contract of every session memo. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableMemo.getOrElseUpdate(
-      (graft.core.Cache.sessionKey(spark), dir, name),
+    graft.core.Cache.memo(spark, "Sources.table", s"$dir/$name")(
       if (name == "events") events(spark, dir)
       else spark.read.parquet(Relayout.path(spark, dir, name)))
 

@@ -73,19 +73,16 @@ object SimQueries {
 
   /** Largest per-user posting-list size, memoized per (session, dir):
     * the runtime guard for the vectorFromMoments rewrite. */
-  private val maxItemsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
   private def maxUserItems(spark: SparkSession, dir: String): Long =
-    maxItemsMemo.getOrElseUpdate(
-      (Cache.sessionKey(spark), dir),
+    Cache.memo(spark, "max_user_items", dir)(
       ratings(spark, dir).groupBy(col("user_id"))
         .agg(count(lit(1)).as("c")).agg(max(col("c")))
         .collect()(0).getLong(0))
 
   /** Force this module's session-shared intermediates (bucketed
-    * ratings table, ratings cache, pair-moment cache, max-items memo)
-    * so bench runs can account the one-time build separately from
-    * per-query time. */
+    * ratings table, ratings cache, pair-moment caches, max-items memo,
+    * the two neighbor-list snapshots) so bench runs can account the
+    * one-time build separately from per-query time. */
   def warm(spark: SparkSession, dir: String): Unit = {
     // Sub-step stderr timers (r16): the component swung 17–107 s
     // under co-tenant load and the single _shared:sim row could not
@@ -102,6 +99,8 @@ object SimQueries {
     leg("pair_moments_long")(moments(spark, dir).count())
     leg("pair_moments_dec_n2")(momentsDec(spark, dir).count())
     leg("max_user_items")(maxUserItems(spark, dir))
+    leg("neighbor_table")(neighborTable(spark, dir).count())
+    leg("rec_ils_top10")(ilsTop10(spark, dir).count())
     // Dialect fixture renders are one-time per (sf dir) too: billing
     // them here keeps q_movies_dialect / q_books_dialect timings about
     // the query, not about whichever run touched the fixture first.
@@ -227,8 +226,6 @@ object SimQueries {
   private def recCellGate = graft.core.PortableHash.spread(
     (col("user_id") * lit(131071L) + col("item_id")) %
       lit(graft.core.PortableHash.M.toLong))
-  private val recIncrStoreMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   /** Incremental neighbor-store upkeep (VERDICT r11 #2): fold a delta
     * ratings batch into STORED moment partials and re-cut only the
@@ -260,17 +257,16 @@ object SimQueries {
     // the nightly store: base-corpus moment partials + neighbor
     // lists, written once per (session, dir) — the annIndexPath memo
     // discipline
-    val path = recIncrStoreMemo.getOrElseUpdate(
-      (Cache.sessionKey(s), d), {
-        val p = sys.props.getOrElse("graft.rec.storeBase",
-          "/root/repo/target/rec_store") + "_incr/" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_")
-        Moments.pairMoments(base)
-          .write.mode("overwrite").parquet(s"$p/moments")
-        neighborsFromMoments(s.read.parquet(s"$p/moments"))
-          .write.mode("overwrite").parquet(s"$p/neighbors")
-        p
-      })
+    val path = Cache.memo(s, "rec_incr_store", d) {
+      val p = sys.props.getOrElse("graft.rec.storeBase",
+        "/root/repo/target/rec_store") + "_incr/" +
+        d.replaceAll("[^A-Za-z0-9._-]", "_")
+      Moments.pairMoments(base)
+        .write.mode("overwrite").parquet(s"$p/moments")
+      neighborsFromMoments(s.read.parquet(s"$p/moments"))
+        .write.mode("overwrite").parquet(s"$p/neighbors")
+      p
+    }
     val stored = s.read.parquet(s"$path/moments")
     val storedNbr = s.read.parquet(s"$path/neighbors")
     // fold: delta-delta pairs + delta×base pairs of the SAME users

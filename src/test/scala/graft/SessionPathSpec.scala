@@ -4,11 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One way to build a session and one way to get the native functions:
-  * `core.Tuning` builds every session, and `GraftExtensions` (set by
-  * `Tuning.SessionDefaults`) injects the functions. A second path would
-  * drift from the first, so these source scans keep it from coming
-  * back. Pure-file tests, no session. */
+/** One way to build a session, one way to get the native functions and
+  * one session memo: `core.Tuning` builds every session,
+  * `GraftExtensions` (set by `Tuning.SessionDefaults`) injects the
+  * functions, and `core.Cache.memo` holds every per-session build. A
+  * second path would drift from the first, so these source scans keep
+  * it from coming back. Pure-file tests, no session. */
 class SessionPathSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(Path, String)] = {
@@ -31,5 +32,17 @@ class SessionPathSpec extends AnyFunSuite {
       case (f, src) if src.contains("createOrReplaceTempFunction") => f.toString
     }
     assert(registrars.isEmpty)
+  }
+
+  test("only core/Cache.scala and io/DialectFixtures.scala hold a concurrent map") {
+    // DialectFixtures' map is JVM-wide fixture state keyed by file
+    // path and backed by an on-disk marker, not session state
+    val allowed = Seq("src/main/scala/graft/core/Cache.scala",
+      "src/main/scala/graft/io/DialectFixtures.scala").map(Paths.get(_).toString)
+    val holders = mainSources.collect {
+      case (f, src) if src.contains("TrieMap") || src.contains("ConcurrentHashMap") =>
+        f.toString
+    }
+    assert(holders.filterNot(allowed.contains) === Nil)
   }
 }

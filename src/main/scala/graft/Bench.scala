@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Benchmark main. Prints ONE compact JSON line (the driver contract)
@@ -35,15 +37,17 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *
   * Load-transient guard (round-13 verdict #4): a shared build reading
   * >1.5× the trailing-round median is rerun ONCE in a fresh session
-  * before recording — the rerun measures the build, not cache hits,
-  * because the first session's caches die with its context. The
-  * record carries `shared_rerun` and `shared_first_sec` so the
-  * transient stays visible. The baseline (ADVICE r14: the original
+  * — the rerun measures the build, not cache hits, because the first
+  * session's caches die with its context. The first measurement
+  * stays the recorded `shared_build_sec` (and `_shared_build`); the
+  * rerun rides beside it as `shared_rerun_sec`, so a slower rerun can
+  * never replace it. The baseline (ADVICE r14: the original
   * `_shared_build` regex matched NOTHING in the committed records —
   * the driver stores the line escaped inside a truncated `tail`
   * string) comes from [[sharedBaseline]]: BENCH_SHARED_HISTORY.jsonl
   * (appended by every full run of this main — the durable source
-  * going forward), else escape-tolerant parsing of committed
+  * going forward — and read only for un-rerun lines of the same sf
+  * dir and core count), else escape-tolerant parsing of committed
   * BENCH_r*.json tails (sum of the `shared_components` map, which
   * survives truncation because it sits near the line's end), else
   * BENCH_FULL.json's `shared_build_sec`; a missing baseline is
@@ -59,6 +63,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    baseline, validating the FIRE path end-to-end (r14 verdict #3:
   *    only the no-false-positive half had ever run).
   * Runs with any of these set do NOT append to the history file.
+  *
+  * Codegen: each sweep's generated-class compiles (Spark's
+  * `CodegenMetrics` counter) and their compile seconds
+  * (`CodeGenerator.compileTime`) go into the full record as
+  * `codegen_compiles_{cold,warm}` and `codegen_compile_sec_{cold,warm}`,
+  * so a full run shows how much of the warm pass still recompiles.
   *
   * Timeout-proof (round-6 postmortem: rc-124 at ~49 min left NO numbers
   * because the only JSON was printed at process end):
@@ -88,24 +98,32 @@ object Bench {
     * the end and survives, and its sum IS the shared build.
     */
   private[graft] def sharedBaseline(dir: java.nio.file.Path,
-      sfDir: Option[String] = None): Option[(Double, String)] = {
+      sfDir: Option[String] = None,
+      cpus: Option[Int] = None): Option[(Double, String)] = {
     import scala.jdk.CollectionConverters._
     def median(vs: Seq[Double]): Option[Double] =
       if (vs.isEmpty) None else Some(vs.sorted.apply(vs.size / 2))
     // (a) our own durable history: one line per completed full run.
-    // Lines are filtered to the CURRENT sf dir when given (ADVICE
-    // r15: one full run against sf0.001 would otherwise inject a
-    // tiny shared-build time and skew the 1.5× guard baseline);
-    // lines without an sf field are kept for back-compat.
+    // Only first measurements that did not trip the guard count (a
+    // tripped one is a transient by definition). Lines are filtered
+    // to the CURRENT sf dir when given (ADVICE r15: one full run
+    // against sf0.001 would otherwise inject a tiny shared-build time
+    // and skew the 1.5× guard baseline); lines without an sf field
+    // are kept for back-compat. With `cpus` given, only lines of that
+    // core count are kept: a line without one came from another host.
     val hist = dir.resolve("BENCH_SHARED_HISTORY.jsonl")
     val fromHist: Option[(Double, String)] = try {
       if (!Files.exists(hist)) None
       else {
         val re = """"shared_build_sec":([0-9.]+)""".r
         val sfRe = """"sf":"([^"]*)"""".r
+        val cpusRe = """"cpus":([0-9]+)""".r
         val vals = Files.readAllLines(hist).asScala.toSeq
+          .filter(_.contains("\"rerun\":false"))
           .filter(l => sfDir.forall(want =>
             sfRe.findFirstMatchIn(l).forall(_.group(1) == want)))
+          .filter(l => cpus.forall(want =>
+            cpusRe.findFirstMatchIn(l).exists(_.group(1).toInt == want)))
           .flatMap(l => re.findFirstMatchIn(l).map(_.group(1).toDouble))
           .takeRight(5)
         median(vals).map(_ -> s"history median of last ${math.min(5, vals.size)}")
@@ -139,6 +157,23 @@ object Bench {
     } catch { case _: Throwable => None }
     fromHist.orElse(fromRecords).orElse(fromFull)
   }
+
+  /** One BENCH_SHARED_HISTORY.jsonl line. The first measurement is
+    * the recorded `shared_build_sec`, whatever a guard rerun reads;
+    * the rerun rides beside it and marks the line `"rerun":true`, which
+    * keeps it out of [[sharedBaseline]]'s median. */
+  private[graft] def historyLine(first: Double, rerun: Option[Double],
+      sfDir: String, cpus: Int): String =
+    s"""{"shared_build_sec":${f3(first)},"rerun":${rerun.isDefined},""" +
+      rerun.fold("")(r => s""""rerun_sec":${f3(r)},""") +
+      s""""sf":"$sfDir","cpus":$cpus}"""
+
+  /** Generated classes compiled so far in this JVM, and their compile
+    * seconds (Spark's exact nanosecond total; the metric's histogram
+    * keeps only a sample of durations). */
+  private def codegen(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
 
   @volatile private var finalPrinted = false
   @volatile private var stopping = false
@@ -257,9 +292,10 @@ object Bench {
           (name, sec, lq, le)
         }
       }
-    var sharedL = runShared("shared")
+    val sharedL = runShared("shared")
     sharedRows = sharedL.map { case (n, s, _, _) => n -> s }
-    var shared = sharedRows.map(_._2).sum
+    val shared = sharedRows.map(_._2).sum
+    sharedSec = shared
 
     // Shared-build load-transient guard (r13 verdict #4): the r13
     // driver artifact's cold total carried a ~49 s shared-build
@@ -268,9 +304,8 @@ object Bench {
     // this round's shared total reads >1.5× the trailing-round
     // median (committed BENCH_r*.json records), rerun it ONCE in a
     // FRESH session (the caches die with the stopped context, so the
-    // rerun measures the build, not cache hits) and record both.
-    val sharedFirst = shared
-    var sharedRerun = false
+    // rerun measures the build, not cache hits) and record the rerun
+    // beside the first measurement, which stays the recorded value.
     // SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE: test-only forced baseline —
     // the only way to exercise the fire path deterministically
     // (r14 verdict #3); flagged via benchOnly/outName, never appended
@@ -278,7 +313,8 @@ object Bench {
     val overrideMedian =
       sys.env.get("SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE").map(_.toDouble)
     val trailingMedian: Option[Double] = overrideMedian.orElse {
-      sharedBaseline(Paths.get(repoDir), Some(sfDir)) match {
+      sharedBaseline(Paths.get(repoDir), Some(sfDir),
+          Some(graft.core.Tuning.cpus)) match {
         case Some((v, src)) =>
           System.err.println(f"[bench] shared-build baseline $v%.1f s ($src)")
           Some(v)
@@ -289,18 +325,17 @@ object Bench {
           None
       }
     }
-    if (!stopping && trailingMedian.exists(m => shared > 1.5 * m)) {
-      System.err.println(f"[bench] shared build $shared%.1f s > 1.5x " +
-        f"trailing median ${trailingMedian.get}%.1f s - rerunning in " +
-        "a fresh session")
-      sharedRerun = true
-      spark.stop()
-      spark = mkSession()
-      sharedL = runShared("shared_rerun")
-      sharedRows = sharedL.map { case (n, s, _, _) => n -> s }
-      shared = sharedRows.map(_._2).sum
-    }
-    sharedSec = shared
+    val rerunL =
+      if (stopping || !trailingMedian.exists(m => shared > 1.5 * m)) None
+      else {
+        System.err.println(f"[bench] shared build $shared%.1f s > 1.5x " +
+          f"trailing median ${trailingMedian.get}%.1f s - rerunning in " +
+          "a fresh session")
+        spark.stop()
+        spark = mkSession()
+        Some(runShared("shared_rerun"))
+      }
+    val rerunSec = rerunL.map(_.map(_._2).sum)
 
     // Cheapest-first: a mid-sweep kill preserves the most numbers; order
     // comes from the previous committed record, absent → registration order.
@@ -342,7 +377,9 @@ object Bench {
     // the warm pass then uses whatever budget remains, up to a 5%
     // print/teardown reserve. NEVER skip the warm pass outright — a
     // cold-only artifact cannot be band-compared across rounds.
+    val cg0 = codegen()
     val coldL = sweep("cold", Double.MaxValue)
+    val cg1 = codegen()
     val cold = coldL.map { case (n, s, _, _) => n -> s }
     // Guaranteed warm window: if the cold pass already ate the 95%
     // mark (observed in the tight-budget shakeout: warm_measured=0 —
@@ -353,6 +390,7 @@ object Bench {
     // warmless one.
     val warmL = sweep("warm", math.max(budget * 0.95,
       elapsed + budget * 0.15))
+    val cg2 = codegen()
     val warmMeasured = warmL.map { case (n, s, _, _) => n -> s }
     val warmByName = warmMeasured.toMap
     val warmPartial = warmMeasured.size < cold.size
@@ -364,16 +402,23 @@ object Bench {
     val warmSum = warm.map(_._2).sum
     val total = shared + warmSum
 
-    val sharedObj = obj(
-      sharedL.map { case (n, s, _, _) => s"_shared:$n" -> s }, _.toString)
+    def sharedObj(l: Seq[(String, Double, Double, Double)]) =
+      obj(l.map { case (n, s, _, _) => s"_shared:$n" -> s }, _.toString)
+    val rerunFields = rerunL.fold("") { l =>
+      s""","shared_rerun_sec":${rerunSec.get},""" +
+        s""""shared_rerun_components":${sharedObj(l)}""" }
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec",
          |"sf":"$sfDir","shared_build_sec":$shared,
-         |"shared_components":$sharedObj,
+         |"shared_components":${sharedObj(sharedL)},
          |"shared_load":${obj(
             sharedL.map { case (n, _, l, _) => s"_shared:$n" -> l }, f3)},
          |"cold_pass_sec":$coldSum,"warm_pass_sec":$warmSum,
-         |"shared_rerun":$sharedRerun,"shared_first_sec":$sharedFirst,
+         |"shared_rerun":${rerunL.isDefined}$rerunFields,
+         |"codegen_compiles_cold":${cg1._1 - cg0._1},
+         |"codegen_compiles_warm":${cg2._1 - cg1._1},
+         |"codegen_compile_sec_cold":${cg1._2 - cg0._2},
+         |"codegen_compile_sec_warm":${cg2._2 - cg1._2},
          |"warm_partial":$warmPartial,
          |"bench_only":${benchOnly.map(_.size).getOrElse(0)},
          |"median_override":${overrideMedian.isDefined},
@@ -408,8 +453,7 @@ object Bench {
       if (benchOnly.isEmpty && overrideMedian.isEmpty &&
           outName == "BENCH_FULL.json") {
         try Files.writeString(Paths.get(repoDir, "BENCH_SHARED_HISTORY.jsonl"),
-          s"""{"shared_build_sec":${f3(shared)},"rerun":$sharedRerun,""" +
-            s""""first_sec":${f3(sharedFirst)},"sf":"$sfDir"}""" + "\n",
+          historyLine(shared, rerunSec, sfDir, graft.core.Tuning.cpus) + "\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] history append failed: $e") }
@@ -419,9 +463,8 @@ object Bench {
         s""","warm_partial":true,"warm_measured":${warmMeasured.size}"""
       else "") + (if (benchOnly.isDefined)
         s""","bench_only":${ordered.size}"""
-      else "") + (if (sharedRerun)
-        s""","shared_rerun":true,"shared_first_sec":${f3(sharedFirst)}"""
-      else "")
+      else "") + rerunSec.fold("")(r =>
+        s""","shared_rerun":true,"shared_rerun_sec":${f3(r)}""")
       // mark BEFORE printing: a SIGTERM between println and the flag
       // assignment would make the hook emit a second driver line
       finalPrinted = true

@@ -63,6 +63,20 @@ object Cache {
     ()
   }
 
+  /** This session's directory for the on-disk store `store`:
+    * `<base>/<appId>`, where `base` is the system property `baseProp`
+    * when given and set, else `<user.dir>/target/<store>`. It is
+    * deleted when the session ends, so no store outlives its session
+    * and two sessions never write over each other's. */
+  def sessionDir(spark: SparkSession, store: String,
+                 baseProp: Option[String] = None): String = {
+    val base = baseProp.flatMap(sys.props.get).getOrElse(
+      sys.props.getOrElse("user.dir", ".") + s"/target/$store")
+    val dir = s"$base/${sessionKey(spark)}"
+    atSessionEnd(spark)(FileUtils.deleteQuietly(new java.io.File(dir)))
+    dir
+  }
+
   /** The app's cleanup queue; the first touch registers the one
     * listener that ends the app's entries and runs its cleanups. */
   private def sessionCleanups(spark: SparkSession, app: String) =

@@ -72,6 +72,24 @@ object Tuning {
     //    when the SparkContext's memory manager is built, so it must
     //    be set here, on the builder — a later `conf.set` is ignored.
     "spark.buffer.pageSize" -> "2m",
+    //  - `spark.sql.codegen.cache.maxEntries` = 384 (default 100): the
+    //    number of compiled whole-stage and expression classes Spark
+    //    keeps. The cache is `CodeGenerator`'s JVM-wide static, sized
+    //    once when the first session in the JVM generates code, so
+    //    like the page size it only takes effect here, on the
+    //    builder. It is a Guava LRU cache split into 4 segments, so
+    //    384 keeps 96 classes per segment. The cf_batch serving loop
+    //    touches 225 distinct classes (72 in the `sim` build, ~150 in
+    //    the cold pass): at 100 each warm round recompiled 121 of
+    //    them, at 384 it recompiles 0-1 (CodegenCacheSpec holds a
+    //    rerun to zero compiles). 320 still overflowed one 80-entry
+    //    segment (4-5 recompiles a round); 4096 kept all ~500 llm_sql
+    //    classes, 408 of them from artifacts that run once, and raised
+    //    its live heap 5.4 %. Each kept entry costs about 30 KB of
+    //    heap for its source and bytecode (llm_sql: +8 MB). Which
+    //    classes stay cached never changes a result, only whether a
+    //    query pays to compile again.
+    "spark.sql.codegen.cache.maxEntries" -> "384",
     //  - `spark.sql.extensions` = graft.GraftExtensions: the engine's
     //    six native SQL functions (graft_hash, graft_fixed_dot,
     //    graft_bloom_agg, graft_might_contain, graft_topk,
@@ -86,17 +104,18 @@ object Tuning {
   def defaults(b: SparkSession.Builder): SparkSession.Builder =
     SessionDefaults.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
+  /** The cores a [[builder]] session runs on: `SPARK_GRAFT_CPUS` when
+    * set, else every core the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** The one session builder behind every graft main and the test
     * session: [[defaults]] on `local[cpus]` with one shuffle partition
-    * per core, UTC session time and no UI. `cpus` is
-    * `SPARK_GRAFT_CPUS` when set, else every core the JVM sees.
-    * Callers add their own confs and call `getOrCreate()`. */
-  def builder(): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    * per core, UTC session time and no UI. Callers add their own confs
+    * and call `getOrCreate()`. */
+  def builder(): SparkSession.Builder =
     defaults(SparkSession.builder().master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-  }
 }

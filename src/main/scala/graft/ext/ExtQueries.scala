@@ -209,13 +209,13 @@ object ExtQueries {
 
   /** Write the full on-disk ANN index ONCE per (session, dir) and
     * return its path — shared by the three *_persist serving queries
-    * so the save cost never repeats per query. Absolute base like
-    * every other persisted artifact (a cwd-relative path would serve
-    * different indexes per launch dir). */
+    * so the save cost never repeats per query. The index lives in the
+    * session's `ann_index` dir (`graft.ann.indexBase` moves its base)
+    * and is deleted when the session ends. */
   private[ext] def annIndexPath(s: SparkSession, d: String): String =
     Cache.memo(s, "ann_index_path", d) {
-      val path = sys.props.getOrElse("graft.ann.indexBase",
-        "/root/repo/target/ann_index") + "/" +
+      val path = Cache.sessionDir(s, "ann_index",
+        Some("graft.ann.indexBase")) + "/" +
         d.replaceAll("[^A-Za-z0-9._-]", "_")
       val e = emb(s, d).select(col("vec_id"), col("embedding"))
       val cells = VectorSearch.labelCentroids(emb(s, d))
@@ -1109,8 +1109,8 @@ object ExtQueries {
     // those); this query prices the index lookup.
     "q_dedup_index_persist" -> ((s, d) => {
       Cache.getOrSnapshot(s, "dedup_index_serve", d) {
-        val path = sys.props.getOrElse("graft.dedup.indexBase",
-          "/root/repo/target/dedup_index") + "/" +
+        val path = Cache.sessionDir(s, "dedup_index",
+          Some("graft.dedup.indexBase")) + "/" +
           d.replaceAll("[^A-Za-z0-9._-]", "_")
         Dedup.minhashBandMins(
             Dedup.shingles(docs(s, d).where(col("doc_id") % 10 =!= 7)))

@@ -104,10 +104,7 @@ object Relayout {
     if (sizeOf(f) > maxBytes || fileCount(f) >= math.max(2, splits / 2))
       return raw
     try {
-      val base = sys.props.getOrElse("user.dir", ".") +
-        s"/target/relayout/${graft.core.Cache.sessionKey(spark)}"
-      graft.core.Cache.atSessionEnd(spark)(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
+      val base = graft.core.Cache.sessionDir(spark, "relayout")
       val out = s"$base/${DialectFixtures.leaf(dir)}/$name"
       spark.read.parquet(raw)
         .repartition(splits)

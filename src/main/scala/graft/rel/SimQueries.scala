@@ -227,6 +227,13 @@ object SimQueries {
     (col("user_id") * lit(131071L) + col("item_id")) %
       lit(graft.core.PortableHash.M.toLong))
 
+  /** The session's neighbor store for `d` (q_rec_serve_persist writes
+    * `neighbors` under it, the incremental serve `incr`), deleted when
+    * the session ends; `graft.rec.storeBase` moves its base. */
+  private def recStoreDir(s: SparkSession, d: String): String =
+    Cache.sessionDir(s, "rec_store", Some("graft.rec.storeBase")) + "/" +
+      d.replaceAll("[^A-Za-z0-9._-]", "_")
+
   /** Incremental neighbor-store upkeep (VERDICT r11 #2): fold a delta
     * ratings batch into STORED moment partials and re-cut only the
     * affected items' top-10 lists — the reference pipeline's nightly
@@ -258,9 +265,7 @@ object SimQueries {
     // lists, written once per (session, dir) — the annIndexPath memo
     // discipline
     val path = Cache.memo(s, "rec_incr_store", d) {
-      val p = sys.props.getOrElse("graft.rec.storeBase",
-        "/root/repo/target/rec_store") + "_incr/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")
+      val p = recStoreDir(s, d) + "/incr"
       Moments.pairMoments(base)
         .write.mode("overwrite").parquet(s"$p/moments")
       neighborsFromMoments(s.read.parquet(s"$p/moments"))
@@ -656,9 +661,7 @@ object SimQueries {
     // dir) and is O(10·items) rows at any corpus size.
     "q_rec_serve_persist" -> ((s, d) => {
       Cache.getOrSnapshot(s, "rec_serve_persist", d) {
-        val path = sys.props.getOrElse("graft.rec.storeBase",
-          "/root/repo/target/rec_store") + "/" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_")
+        val path = recStoreDir(s, d) + "/neighbors"
         neighborTable(s, d).write.mode("overwrite").parquet(path)
         recServe(s, d, s.read.parquet(path))
       }.orderBy(col("user_id"), col("rn"))

@@ -68,6 +68,49 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(all.isDefined && math.abs(all.get._1 - 50.0) < 1e-9, all)
   }
 
+  test("history lines of another core count, or of no stated core " +
+    "count, are excluded from the median") {
+    val d = tmpDir()
+    Files.writeString(d.resolve("BENCH_SHARED_HISTORY.jsonl"),
+      """{"shared_build_sec":50.0,"rerun":false,"sf":"/t/sf0.1"}""" + "\n" +
+        """{"shared_build_sec":52.0,"rerun":false,"sf":"/t/sf0.1","cpus":32}""" + "\n" +
+        """{"shared_build_sec":90.0,"rerun":false,"sf":"/t/sf0.1","cpus":4}""" + "\n" +
+        """{"shared_build_sec":94.0,"rerun":false,"sf":"/t/sf0.1","cpus":4}""" + "\n")
+    val got = Bench.sharedBaseline(d, Some("/t/sf0.1"), Some(4))
+    // median of {90, 94}: the 32-core and the unkeyed line are out
+    assert(got.isDefined && math.abs(got.get._1 - 94.0) < 1e-9, got)
+    assert(Bench.sharedBaseline(d, Some("/t/sf0.1"), Some(8)).isEmpty)
+  }
+
+  test("only lines with \"rerun\":false enter the history median") {
+    val d = tmpDir()
+    Files.writeString(d.resolve("BENCH_SHARED_HISTORY.jsonl"),
+      """{"shared_build_sec":60.0,"rerun":false,"sf":"/x","cpus":4}""" + "\n" +
+        """{"shared_build_sec":407.2,"rerun":true,"rerun_sec":222.3,"sf":"/x","cpus":4}""" + "\n" +
+        """{"shared_build_sec":124.5,"rerun":true,"rerun_sec":540.2,"sf":"/x","cpus":4}""" + "\n" +
+        """{"shared_build_sec":62.0}""" + "\n" +
+        """{"shared_build_sec":64.0,"rerun":false,"sf":"/x","cpus":4}""" + "\n")
+    val got = Bench.sharedBaseline(d, Some("/x"), Some(4))
+    // median of {60, 64}: both rerun lines and the unmarked line are out
+    assert(got.isDefined && math.abs(got.get._1 - 64.0) < 1e-9, got)
+  }
+
+  test("a history line keeps the first measurement as shared_build_sec " +
+    "and records a slower rerun beside it") {
+    val rerun = Bench.historyLine(124.469, Some(540.203), "/x", 4)
+    assert(rerun ===
+      """{"shared_build_sec":124.469,"rerun":true,"rerun_sec":540.203,""" +
+        """"sf":"/x","cpus":4}""")
+    val plain = Bench.historyLine(61.5, None, "/x", 4)
+    assert(plain === """{"shared_build_sec":61.500,"rerun":false,"sf":"/x","cpus":4}""")
+    // the lines the bench writes are the lines the baseline reads
+    val d = tmpDir()
+    Files.writeString(d.resolve("BENCH_SHARED_HISTORY.jsonl"),
+      Seq(plain, rerun).mkString("", "\n", "\n"))
+    val got = Bench.sharedBaseline(d, Some("/x"), Some(4))
+    assert(got.isDefined && math.abs(got.get._1 - 61.5) < 1e-9, got)
+  }
+
   test("BENCH_FULL.json is the last resort; empty dir yields None " +
     "(which main LOGS rather than silently disabling the guard)") {
     val d = tmpDir()

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** A stopped session leaves nothing behind: its memo entries are
   * dropped and its on-disk artifacts (the bucketed ratings table, the
-  * relayout copies) are deleted. The shared test session is never
+  * relayout copies, the persisted neighbor store) are deleted. The shared test session is never
   * stopped, so the probe runs in a child JVM with this JVM's classpath
   * and options, and reports each check on stdout. */
 class SessionEndSpec extends AnyFunSuite {
@@ -43,7 +43,8 @@ class SessionEndSpec extends AnyFunSuite {
 }
 
 /** The child JVM of [[SessionEndSpec]]: args are the sf dir and the
-  * warehouse dir; the working dir holds the relayout copies. */
+  * warehouse dir; the working dir holds the relayout copies and the
+  * neighbor store. */
 object SessionEndProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, warehouse) = args
@@ -60,17 +61,21 @@ object SessionEndProbe {
     def bucketed = Option(new File(warehouse).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("graft_ratings_"))
     val relayout = new File(sys.props("user.dir"), s"target/relayout/$app")
+    val recStore = new File(sys.props("user.dir"), s"target/rec_store/$app")
 
     rel.SimQueries.queries("q_parse_ratings")(spark, dir).count()
     io.Relayout.warm(spark, dir)
+    rel.SimQueries.queries("q_rec_serve_persist")(spark, dir).count()
     val ref = persistedProbe(spark, dir)
     check("bucketed table written")(bucketed.nonEmpty)
     check("relayout copies written")(relayout.isDirectory)
+    check("neighbor store written under the session's dir")(recStore.isDirectory)
     check("probe frame memoized")(ref.get != null)
 
     spark.stop()
     check("bucketed table deleted at session end")(bucketed.isEmpty)
     check("relayout copies deleted at session end")(!relayout.exists())
+    check("neighbor store deleted at session end")(!recStore.exists())
     var tries = 0
     while (ref.get != null && tries < 20) {
       System.gc(); Thread.sleep(100); tries += 1

@@ -50,7 +50,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * dir and core count), else escape-tolerant parsing of committed
   * BENCH_r*.json tails (sum of the `shared_components` map, which
   * survives truncation because it sits near the line's end), else
-  * BENCH_FULL.json's `shared_build_sec`; a missing baseline is
+  * BENCH_FULL.json's `shared_build_sec` when that record's `sf` and
+  * `cpus` (if it has one) match the run's; a missing baseline is
   * LOGGED, never a silent None.
   *
   * Test/iteration envs (all flagged in the record so a filtered run
@@ -103,6 +104,8 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def median(vs: Seq[Double]): Option[Double] =
       if (vs.isEmpty) None else Some(vs.sorted.apply(vs.size / 2))
+    val sfRe = """"sf":"([^"]*)"""".r
+    val cpusRe = """"cpus":([0-9]+)""".r
     // (a) our own durable history: one line per completed full run.
     // Only first measurements that did not trip the guard count (a
     // tripped one is a transient by definition). Lines are filtered
@@ -116,8 +119,6 @@ object Bench {
       if (!Files.exists(hist)) None
       else {
         val re = """"shared_build_sec":([0-9.]+)""".r
-        val sfRe = """"sf":"([^"]*)"""".r
-        val cpusRe = """"cpus":([0-9]+)""".r
         val vals = Files.readAllLines(hist).asScala.toSeq
           .filter(_.contains("\"rerun\":false"))
           .filter(l => sfDir.forall(want =>
@@ -147,13 +148,21 @@ object Bench {
       median(vals).map(_ ->
         s"BENCH_r*.json median of last ${math.min(5, vals.size)}")
     } catch { case _: Throwable => None }
-    // (c) the last local full record (single value, weakest)
+    // (c) the last local full record (single value, weakest), only
+    // when it was measured at the run's sf dir and, when it states
+    // one, the run's core count
     val fromFull: Option[(Double, String)] = try {
       val p = dir.resolve("BENCH_FULL.json")
       if (!Files.exists(p)) None
-      else """"shared_build_sec":([0-9.]+)""".r
-        .findFirstMatchIn(Files.readString(p))
-        .map(m => m.group(1).toDouble -> "BENCH_FULL.json shared_build_sec")
+      else {
+        val txt = Files.readString(p)
+        val sameRun =
+          sfDir.forall(want => sfRe.findFirstMatchIn(txt).exists(_.group(1) == want)) &&
+            cpus.forall(want => cpusRe.findFirstMatchIn(txt).forall(_.group(1).toInt == want))
+        """"shared_build_sec":([0-9.]+)""".r.findFirstMatchIn(txt)
+          .filter(_ => sameRun)
+          .map(m => m.group(1).toDouble -> "BENCH_FULL.json shared_build_sec")
+      }
     } catch { case _: Throwable => None }
     fromHist.orElse(fromRecords).orElse(fromFull)
   }
@@ -409,7 +418,8 @@ object Bench {
         s""""shared_rerun_components":${sharedObj(l)}""" }
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec",
-         |"sf":"$sfDir","shared_build_sec":$shared,
+         |"sf":"$sfDir","cpus":${graft.core.Tuning.cpus},
+         |"shared_build_sec":$shared,
          |"shared_components":${sharedObj(sharedL)},
          |"shared_load":${obj(
             sharedL.map { case (n, _, l, _) => s"_shared:$n" -> l }, f3)},

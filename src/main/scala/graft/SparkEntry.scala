@@ -26,6 +26,9 @@ object SparkEntry {
     * so first-touch snapshot costs never land on whichever query
     * happens to run first in a cold sweep (VERDICT r10: the four
     * ">2× band" cold outliers were all un-named first-touch builds).
+    * Components stay serial, since both harnesses time one component
+    * at a time; the independent legs inside one component may overlap
+    * ([[graft.core.Cache.forceAll]]) and all finish before it returns.
     * Verify/driver runs need not call them — the first consuming
     * query triggers the same builds through [[graft.core.Cache]]. */
   def sharedComponents: Seq[(String, (SparkSession, String) => Unit)] =

@@ -216,7 +216,7 @@ object ExtQueries {
     Cache.memo(s, "ann_index_path", d) {
       val path = Cache.sessionDir(s, "ann_index",
         Some("graft.ann.indexBase")) + "/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")
+        Cache.leafFor(d)
       val e = emb(s, d).select(col("vec_id"), col("embedding"))
       val cells = VectorSearch.labelCentroids(emb(s, d))
         .select(col("label").cast("long").as("cell_id"), col("centroid"))
@@ -464,35 +464,35 @@ object ExtQueries {
 
   /** Force the trained quantizers (q_ann_kmeans's codebook, the PQ
     * codebook + codes — session-shared artifacts like the LSH
-    * tables). */
-  def warmVectors(spark: SparkSession, dir: String): Unit = {
-    Cache.getOrPersist(spark, "kmeans_cells_8_2", dir)(
-      VectorSearch.kmeansCells(
-        emb(spark, dir).select(col("vec_id"), col("embedding")),
-        k = 8, iters = 2)).count()
-    // label-centroid quantizer + its inverted file (r17) — first
-    // touch otherwise lands on whichever IVF serve runs first
-    labelCellsC(spark, dir).count()
-    ivfLabelAssignC(spark, dir).count()
-    pqCentC(spark, dir).count()
-    pqCodesC(spark, dir).count()
-    // the composed IVF-PQ shortlist snapshot too — otherwise its
-    // build lands on whichever of q_ann_ivf_pq / its recall twin
-    // runs first in a cold sweep
-    ivfPqShortlistC(spark, dir).count()
-    ()
-  }
+    * tables), the label-centroid quantizer with its inverted file
+    * (r17) and the composed IVF-PQ shortlist snapshot — otherwise
+    * their first touch lands on whichever IVF serve runs first in a
+    * cold sweep. */
+  def warmVectors(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => Cache.getOrPersist(spark, "kmeans_cells_8_2", dir)(
+        VectorSearch.kmeansCells(
+          emb(spark, dir).select(col("vec_id"), col("embedding")),
+          k = 8, iters = 2)).count(),
+      () => {
+        labelCellsC(spark, dir).count()
+        Cache.forceAll(spark)(
+          () => ivfLabelAssignC(spark, dir).count(),
+          () => ivfPqShortlistC(spark, dir).count())
+      },
+      () => { pqCentC(spark, dir).count(); pqCodesC(spark, dir).count() })
 
-  /** Force the simhash signature/pair tables (primary + rescue) and
-    * the banded-LSH pair cosines (all small next to the minhash
-    * chain — one future). */
-  def warmSimhash(spark: SparkSession, dir: String): Unit = {
-    simhashSigsC(spark, dir).count()
-    simhashPairsC(spark, dir).count()
-    simhashRescueC(spark, dir).count()
-    bandedCosC(spark, dir).count()
-    ()
-  }
+  /** Force the simhash signature/pair tables (primary + rescue, both
+    * over the signatures) beside the banded-LSH pair cosines. */
+  def warmSimhash(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => {
+        simhashSigsC(spark, dir).count()
+        Cache.forceAll(spark)(
+          () => simhashPairsC(spark, dir).count(),
+          () => simhashRescueC(spark, dir).count())
+      },
+      () => bandedCosC(spark, dir).count())
 
   /** Force this module's session-shared intermediates (shingle table,
     * LSH candidate pairs) — see [[graft.rel.SimQueries.warm]]. */
@@ -506,49 +506,41 @@ object ExtQueries {
     * that otherwise lands on whichever of q_decontaminate /
     * q_ngram_jaccard / q_minhash_rescue runs first (VERDICT r10:
     * 53.2 s of q_decontaminate's driver cold was this build). */
-  def warmShinglePostings(spark: SparkSession, dir: String): Unit = {
-    shinglePostsC(spark, dir).count()
-    rescueCandC(spark, dir).count()
-    ()
-  }
+  def warmShinglePostings(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => shinglePostsC(spark, dir).count(),
+      () => rescueCandC(spark, dir).count())
 
-  /** Force the bigram-LM count tables + per-doc score frame and the
-    * BM25 term-frequency postings — the q_lm_score / q_token_entropy
-    * / q_bm25_retrieval first-touch snapshots. */
-  def warmLmTables(spark: SparkSession, dir: String): Unit = {
-    lmDocScores(spark, dir).count()
-    bm25TfC(spark, dir).count()
-    // the retrieval evaluations' shared probe-term + candidate
-    // snapshots (r16) — first-touch otherwise lands on whichever of
-    // q_retrieval_mrr / q_retrieval_ndcg runs first in a cold sweep
-    bm25CandC(spark, dir).count()
-    ()
-  }
+  /** Force the bigram-LM count tables + per-doc score frame beside the
+    * BM25 term-frequency postings and the retrieval evaluations'
+    * shared probe-term + candidate snapshots (r16) — the q_lm_score /
+    * q_token_entropy / q_bm25_retrieval / q_retrieval_* first-touch
+    * builds. */
+  def warmLmTables(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => lmDocScores(spark, dir).count(),
+      () => { bm25TfC(spark, dir).count(); bm25CandC(spark, dir).count() })
 
   /** Force both graph-ANN serving structures (layer-0 NSW graph +
-    * layer-1 subset graph) — the q_ann_graph/q_ann_hnsw first-touch
-    * snapshot builds. */
-  def warmKnnGraph(spark: SparkSession, dir: String): Unit = {
-    knnGraphC(spark, dir).count()
-    knnGraphL1C(spark, dir).count()
-    // the adjacency-joined corpus snapshots the beam serves scan
-    knnCorpusC(spark, dir).count()
-    knnCorpusL1C(spark, dir).count()
-    ()
-  }
+    * layer-1 subset graph), each with the adjacency-joined corpus
+    * snapshot its beam serve scans — the q_ann_graph/q_ann_hnsw
+    * first-touch builds. */
+  def warmKnnGraph(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => { knnGraphC(spark, dir).count(); knnCorpusC(spark, dir).count() },
+      () => { knnGraphL1C(spark, dir).count(); knnCorpusL1C(spark, dir).count() })
 
   /** Render every binary media fixture set (PNG/JPEG/BMP/GIF, WAV,
     * animated GIF, phash PNGs) — one-time per sf dir; billing them
     * here keeps the multimodal queries' cold numbers about decode
     * work, not about whichever query wrote the fixture first. */
-  def warmMediaFixtures(spark: SparkSession, dir: String): Unit = {
-    graft.io.MediaFixtures.write(spark, dir)
-    graft.io.AudioFixtures.write(spark, dir)
-    graft.io.VideoFixtures.write(spark, dir)
-    graft.io.PhashFixtures.write(spark, dir)
-    graft.io.DialectFixtures.writeDocsHtml(spark, dir)
-    ()
-  }
+  def warmMediaFixtures(spark: SparkSession, dir: String): Unit =
+    Cache.forceAll(spark)(
+      () => graft.io.MediaFixtures.write(spark, dir),
+      () => graft.io.AudioFixtures.write(spark, dir),
+      () => graft.io.VideoFixtures.write(spark, dir),
+      () => graft.io.PhashFixtures.write(spark, dir),
+      () => graft.io.DialectFixtures.writeDocsHtml(spark, dir))
 
   /** q_dataset_mix rates (shared by query and oracle). */
   private[ext] val MixRates =
@@ -1111,7 +1103,7 @@ object ExtQueries {
       Cache.getOrSnapshot(s, "dedup_index_serve", d) {
         val path = Cache.sessionDir(s, "dedup_index",
           Some("graft.dedup.indexBase")) + "/" +
-          d.replaceAll("[^A-Za-z0-9._-]", "_")
+          Cache.leafFor(d)
         Dedup.minhashBandMins(
             Dedup.shingles(docs(s, d).where(col("doc_id") % 10 =!= 7)))
           .write.mode("overwrite").partitionBy("b").parquet(path)

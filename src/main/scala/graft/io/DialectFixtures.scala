@@ -1,6 +1,6 @@
 package graft.io
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,12 +61,14 @@ object DialectFixtures {
   def moviesPath(dir: String): String = s"$BaseDir/${leaf(dir)}/movies"
   def booksPath(dir: String): String = s"$BaseDir/${leaf(dir)}/books"
 
-  private val written = TrieMap.empty[String, Boolean]
+  /** One fixture path's render state: the canonical source dir it
+    * was rendered from in this JVM, set under the cell's own lock (the
+    * [[graft.core.Cache]] cell discipline), so racing first callers
+    * of one path wait for the single render and a render that throws
+    * leaves the cell empty for the next caller. */
+  private final class Render { @volatile var src: Option[String] = None }
+  private val renders = new ConcurrentHashMap[String, Render]
 
-  /** Render-once guard: in-JVM memo on the fixture path, then the
-    * on-disk `_GRAFT_SRC` marker for cross-process reuse. Throws if an
-    * existing fixture was rendered from a DIFFERENT source dir with
-    * the same leaf name. */
   /** Canonical form used for marker comparison: the same source dir
     * spelled differently (trailing slash, `//`, relative path) must
     * compare equal, or a re-run with an equivalent spelling would
@@ -74,29 +76,35 @@ object DialectFixtures {
   private def canon(dir: String): String =
     Paths.get(dir).toAbsolutePath.normalize().toString
 
+  /** Render-once guard: in-JVM, one render per fixture path under the
+    * path's lock; across processes, the on-disk `_GRAFT_SRC` marker.
+    * Throws if an existing fixture was rendered from a DIFFERENT
+    * source dir with the same leaf name. */
   private[io] def once(path: String, dir: String)(write: => Unit): Unit = {
-    // memo key includes the SOURCE dir: a later call for the same
-    // fixture path from a different dir must reach the marker check
-    // below (and throw), not silently reuse the memo
-    written.getOrElseUpdate(s"$path|${canon(dir)}", {
-      val marker = Paths.get(path, "_GRAFT_SRC")
-      val existing =
-        if (Files.exists(marker)) Some(Files.readString(marker).trim) else None
-      existing match {
-        case Some(src) if src == canon(dir) => () // already rendered
-        case Some(src) =>
-          throw new IllegalStateException(
-            s"dialect fixture $path was rendered from '$src' but '$dir' " +
-              "was requested — two source dirs share a leaf name; set " +
-              "-Dgraft.fixture.dir to separate them")
-        case None =>
-          write
-          Files.createDirectories(marker.getParent)
-          Files.writeString(marker, canon(dir))
+    val src = canon(dir)
+    val cell = renders.computeIfAbsent(path, _ => new Render)
+    // a call from a different source dir must reach the marker check
+    // below (and throw), not silently reuse this JVM's render
+    if (!cell.src.contains(src)) cell.synchronized {
+      if (!cell.src.contains(src)) {
+        val marker = Paths.get(path, "_GRAFT_SRC")
+        val existing =
+          if (Files.exists(marker)) Some(Files.readString(marker).trim) else None
+        existing match {
+          case Some(`src`) => () // already rendered
+          case Some(other) =>
+            throw new IllegalStateException(
+              s"dialect fixture $path was rendered from '$other' but '$dir' " +
+                "was requested — two source dirs share a leaf name; set " +
+                "-Dgraft.fixture.dir to separate them")
+          case None =>
+            write
+            Files.createDirectories(marker.getParent)
+            Files.writeString(marker, src)
+        }
+        cell.src = Some(src)
       }
-      true
-    })
-    ()
+    }
   }
 
   def docsDriftPath(dir: String): String =

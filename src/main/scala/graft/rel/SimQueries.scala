@@ -232,7 +232,7 @@ object SimQueries {
     * the session ends; `graft.rec.storeBase` moves its base. */
   private def recStoreDir(s: SparkSession, d: String): String =
     Cache.sessionDir(s, "rec_store", Some("graft.rec.storeBase")) + "/" +
-      d.replaceAll("[^A-Za-z0-9._-]", "_")
+      Cache.leafFor(d)
 
   /** Incremental neighbor-store upkeep (VERDICT r11 #2): fold a delta
     * ratings batch into STORED moment partials and re-cut only the

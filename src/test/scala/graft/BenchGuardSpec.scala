@@ -122,6 +122,23 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(got.get._2.contains("BENCH_FULL"))
   }
 
+  test("BENCH_FULL.json counts only when its sf matches the run's and " +
+    "its cpus, when present, do too") {
+    val d = tmpDir()
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"metric":"total","sf":"/t/sf0.1","shared_build_sec":540.2,"x":1}""")
+    // the sf0.1 rerun value must not gate an sf0.01 run
+    assert(Bench.sharedBaseline(d, Some("/t/sf0.01"), Some(4)).isEmpty)
+    // same sf, no stated core count: still the last resort
+    assert(Bench.sharedBaseline(d, Some("/t/sf0.1"), Some(4)).map(_._1) === Some(540.2))
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"metric":"total","sf":"/t/sf0.01","cpus":32,"shared_build_sec":60.0}""")
+    assert(Bench.sharedBaseline(d, Some("/t/sf0.01"), Some(4)).isEmpty)
+    val got = Bench.sharedBaseline(d, Some("/t/sf0.01"), Some(32))
+    assert(got.map(_._1) === Some(60.0))
+    assert(got.get._2.contains("BENCH_FULL"))
+  }
+
   test("the REAL committed records in this checkout produce a baseline") {
     val repo = Paths.get(Bench.repoDir)
     assume(Files.exists(repo.resolve("BENCH_r14.json")))

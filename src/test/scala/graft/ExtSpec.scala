@@ -1585,6 +1585,18 @@ class ExtSpec extends SparkSpec {
     assert(served === expected)
   }
 
+  test("q_dedup_index_persist writes its postings under a leaf that " +
+    "Spark does not treat as hidden") {
+    assert(graft.core.Cache.leafFor("/data/sf0.001") === "data_sf0.001")
+    assert(graft.core.Cache.leafFor("./._x/y") === "x_y")
+    graft.ext.ExtQueries.queries("q_dedup_index_persist")(spark, sf001).count()
+    val store = new java.io.File(graft.core.Cache.sessionDir(spark,
+      "dedup_index", Some("graft.dedup.indexBase")))
+    val leaves = Option(store.list()).toSeq.flatten
+    assert(leaves.nonEmpty, s"nothing written under $store")
+    leaves.foreach(l => assert(!l.startsWith("_") && !l.startsWith("."), l))
+  }
+
   test("content-defined chunks are insertion-robust where fixed " +
     "windows are not, chunks reassemble the text exactly") {
     // a real corpus doc, and a copy with ONE character inserted

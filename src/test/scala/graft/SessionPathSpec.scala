@@ -45,4 +45,22 @@ class SessionPathSpec extends AnyFunSuite {
     }
     assert(holders.filterNot(allowed.contains) === Nil)
   }
+
+  test("only core/Cache.scala creates an executor or a thread pool") {
+    // Cache.forceAll is the one way main code runs work concurrently;
+    // the shutdown hooks of Bench and Verify are the only other threads
+    val cache = Paths.get("src/main/scala/graft/core/Cache.scala").toString
+    val hooks = Seq("src/main/scala/graft/Bench.scala",
+      "src/main/scala/graft/Verify.scala").map(Paths.get(_).toString)
+    val poolApis = Seq("Executors.", "ExecutorService", "ThreadPoolExecutor",
+      "ForkJoinPool", "ExecutionContext", "Future")
+    val pools = mainSources.collect {
+      case (f, src) if poolApis.exists(src.contains) => f.toString
+    }
+    assert(pools.filterNot(_ == cache) === Nil)
+    val threads = mainSources.collect {
+      case (f, src) if src.contains("new Thread(") => f.toString
+    }
+    assert(threads.filterNot((cache +: hooks).contains) === Nil)
+  }
 }

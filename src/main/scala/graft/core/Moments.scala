@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * Moments are summed over `rating_i` (1e-4 fixed-point LONG, see
   * [[graft.io.Sources.ratings]]): integer sums are exact, hence
   * independent of shuffle order. Products stay < 2^63 while
-  * co-rater counts per pair < ~3·10^4 — far above testdata; the 100 TB
-  * deployment note is to switch the sums to DECIMAL(38,0).
+  * co-rater counts per pair < ~3·10^4 — far above testdata;
+  * [[RatingStats.longExact]] is the exact bound, and past it
+  * [[pairMomentsDec]] sums in DECIMAL(38,0).
   *
   * 100 TB notes: bucket the ratings table by `user_id` at write time —
   * the self-join then co-partitions and its shuffle disappears; the
@@ -71,7 +72,12 @@ object Moments {
     *
     * DuckDB twin: plain `sum(a.rating_i*b.rating_i)` — DuckDB
     * accumulates BIGINT sums in HUGEINT (128-bit) natively, so the
-    * SQL side is [[pairMomentsSql]] as-is. */
+    * SQL side is [[pairMomentsSql]] as-is.
+    *
+    * When [[RatingStats.longExact]] holds, [[decMoments]] casts the
+    * LONG moments instead ([[decFromLong]]): same values, same schema,
+    * no second C(n,2) join and aggregate. This aggregation runs only
+    * past that bound, where a LONG sum could overflow. */
   def pairMomentsDec(ratings: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val a = ratings.select(
       (col("user_id") +: col("item_id").as("item_x")
@@ -95,6 +101,54 @@ object Moments {
       .groupBy(col("item_x"), col("item_y"))
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** [[pairMoments]] output in [[pairMomentsDec]]'s schema: sx, sy
+    * cast to DECIMAL(29,0) and sxx, syy, sxy to DECIMAL(38,0); other
+    * columns pass through in place. A LONG fits both decimals, so the
+    * cast is exact whenever the LONG sums are ([[RatingStats]]). */
+  def decFromLong(m: DataFrame): DataFrame =
+    m.withColumns(Map(
+      "sx" -> col("sx").cast("decimal(29,0)"),
+      "sy" -> col("sy").cast("decimal(29,0)"),
+      "sxx" -> col("sxx").cast("decimal(38,0)"),
+      "syy" -> col("syy").cast("decimal(38,0)"),
+      "sxy" -> col("sxy").cast("decimal(38,0)")))
+
+  /** What bounds every pair sum of a ratings frame with one row per
+    * (user_id, item_id) cell, as [[graft.io.Sources.ratings]] has:
+    * the largest per-user posting count, M = max |rating_i| and U =
+    * the number of distinct users. */
+  final case class RatingStats(maxUserItems: Long, maxAbsRating: BigInt,
+                               users: Long) {
+    /** Each user adds at most one term to a pair, so n ≤ U, and every
+      * term, partial and final sum of sx, sy, sxx, syy, sxy is at most
+      * U·M² in absolute value (|r| ≤ r² for integer r ≠ 0). When U·M²
+      * fits a LONG, [[pairMoments]] is exact and [[decFromLong]] of it
+      * equals [[pairMomentsDec]]. */
+    def longExact: Boolean =
+      BigInt(users) * maxAbsRating * maxAbsRating <= BigInt(Long.MaxValue)
+  }
+
+  /** [[RatingStats]] of `ratings` in one job: per user count, max and
+    * min rating_i, then their max, max, min and the user count. */
+  def ratingStats(ratings: DataFrame): RatingStats = {
+    val row = ratings.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("c"), max(col("rating_i")).as("hi"),
+        min(col("rating_i")).as("lo"))
+      .agg(max(col("c")), max(col("hi")), min(col("lo")), count(lit(1)))
+      .collect()(0)
+    def big(i: Int) = if (row.isNullAt(i)) BigInt(0) else BigInt(row.getLong(i))
+    RatingStats(if (row.isNullAt(0)) 0L else row.getLong(0),
+      big(1).abs.max(big(2).abs), row.getLong(3))
+  }
+
+  /** The DECIMAL pair moments of `ratings`: [[decFromLong]] of `long`
+    * (its [[pairMoments]]) when `stats` rules out LONG overflow, else
+    * [[pairMomentsDec]]. `long` is not evaluated on that path: an
+    * overflowing LONG build throws under ANSI. */
+  def decMoments(ratings: DataFrame, stats: RatingStats,
+                 long: => DataFrame): DataFrame =
+    if (stats.longExact) decFromLong(long) else pairMomentsDec(ratings)
 
   /** Cross-side pair moments: every co-rating pair with one rating
     * from `a` and one from `b` (same user, distinct items),

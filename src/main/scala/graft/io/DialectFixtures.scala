@@ -36,9 +36,12 @@ import org.apache.spark.sql.functions._
 object DialectFixtures {
   import java.nio.file.{Files, Paths}
 
-  /** Fixture base; override with `-Dgraft.fixture.dir=...`. */
-  val BaseDir: String =
-    sys.props.getOrElse("graft.fixture.dir", "/root/repo/target/dialect")
+  /** Fixture base: `-Dgraft.fixture.dir=...` when set, else
+    * `<user.dir>/target/dialect`, so each checkout renders its own. */
+  val BaseDir: String = baseDir(sys.props.get("graft.fixture.dir"))
+
+  private[graft] def baseDir(prop: Option[String]): String =
+    prop.getOrElse(sys.props.getOrElse("user.dir", ".") + "/target/dialect")
 
   /** The sf dir the driver's DuckDB verify runs against (builder-
     * prompt contract: verify is always sf0.01) — the oracle SQL

@@ -53,34 +53,41 @@ object SimQueries {
     * LONG cache plus the n≥2-filtered decimal cache ([[momentsDec]])
     * is strictly better: ~10.5 s of shared build where the fused
     * persist paid 23.1, and ~1.4 GB less cache memory. */
-  private def moments(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def moments(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrPersist(spark, "pair_moments", dir)(
       Moments.pairMoments(ratingsBucketed(spark, dir)))
 
   /** DECIMAL overflow-audit twin, cached only for the n ≥ 2 pair
-    * population its single consumer (q_sim_pearson_dec) serves: the
-    * decimal AGGREGATION still runs over every co-rating pair (the
-    * overflow-safe plan is exercised end to end), but only 413k of
-    * the 12.7M result rows survive the consumer's own n ≥ 2 filter —
-    * persisting just those makes the decimal columnar encode noise
-    * (~0.3 s) instead of the 18 s the unfiltered fused persist paid.
-    * Any future consumer that needs n = 1 decimal pairs calls
-    * [[Moments.pairMomentsDec]] directly. */
-  private def momentsDec(spark: SparkSession, dir: String): DataFrame =
+    * population its single consumer (q_sim_pearson_dec) serves. When
+    * the ratings' [[Moments.RatingStats]] bound rules out LONG
+    * overflow, the LONG sums are exact and this is a cast of the
+    * [[moments]] cache ([[Moments.decFromLong]]): no second C(n,2)
+    * join and aggregate. Past the bound it is the DECIMAL-buffer
+    * aggregate over every co-rating pair ([[Moments.pairMomentsDec]]),
+    * and the LONG cache is never touched (its build would throw under
+    * ANSI).
+    * Either way only 413k of the 12.7M sf0.1 pair rows survive the
+    * n ≥ 2 filter, so the decimal columnar encode is noise. Any
+    * future consumer that needs n = 1 decimal pairs calls
+    * [[Moments.decMoments]] directly. */
+  private[graft] def momentsDec(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrPersist(spark, "pair_moments_dec_n2", dir)(
-      Moments.pairMomentsDec(ratingsBucketed(spark, dir))
+      Moments.decMoments(ratingsBucketed(spark, dir),
+          ratingStats(spark, dir), moments(spark, dir))
         .where(col("n") >= 2))
 
-  /** Largest per-user posting-list size, memoized per (session, dir):
-    * the runtime guard for the vectorFromMoments rewrite. */
+  /** The ratings' pair-sum bound and largest per-user posting list,
+    * one job memoized per (session, dir). */
+  private def ratingStats(spark: SparkSession, dir: String): Moments.RatingStats =
+    Cache.memo(spark, "rating_stats", dir)(Moments.ratingStats(ratings(spark, dir)))
+
+  /** Largest per-user posting-list size: the runtime guard for the
+    * vectorFromMoments rewrite. */
   private def maxUserItems(spark: SparkSession, dir: String): Long =
-    Cache.memo(spark, "max_user_items", dir)(
-      ratings(spark, dir).groupBy(col("user_id"))
-        .agg(count(lit(1)).as("c")).agg(max(col("c")))
-        .collect()(0).getLong(0))
+    ratingStats(spark, dir).maxUserItems
 
   /** Force this module's session-shared intermediates (bucketed
-    * ratings table, ratings cache, pair-moment caches, max-items memo,
+    * ratings table, ratings cache, pair-moment caches, rating-stats memo,
     * the two neighbor-list snapshots) so bench runs can account the
     * one-time build separately from per-query time. */
   def warm(spark: SparkSession, dir: String): Unit = {
@@ -97,8 +104,8 @@ object SimQueries {
     }
     leg("ratings_bucketed+persist")(ratings(spark, dir).count())
     leg("pair_moments_long")(moments(spark, dir).count())
-    leg("pair_moments_dec_n2")(momentsDec(spark, dir).count())
     leg("max_user_items")(maxUserItems(spark, dir))
+    leg("pair_moments_dec_n2")(momentsDec(spark, dir).count())
     leg("neighbor_table")(neighborTable(spark, dir).count())
     leg("rec_ils_top10")(ilsTop10(spark, dir).count())
     // Dialect fixture renders are one-time per (sf dir) too: billing
@@ -134,10 +141,7 @@ object SimQueries {
     * would (the incremental-upkeep path). */
   private def neighborsFromMoments(m: DataFrame,
       only: Option[DataFrame] = None): DataFrame = {
-    val sims = Moments.asDoubles(m)
-      .withColumn("corr", corrCol)
-      .where(col("n") > 0)
-      .select(col("item_x"), col("item_y"), col("corr"))
+    val sims = corrPairs(m).select(col("item_x"), col("item_y"), col("corr"))
     // the moment table stores each unordered pair once (x < y);
     // serving needs neighbors in both directions
     val sym = sims.unionByName(sims.select(
@@ -172,21 +176,29 @@ object SimQueries {
       : DataFrame = neighborTable(s, d)
 
   /** Unsymmetrized top-10-by-corr list per item (rank over ALL n>0
-    * pairs, ties by item_y) — the acceptance-metric twin of
-    * [[neighborTable]], shared by q_rec_ils (both pair-join sides)
-    * and q_rec_coverage, session-snapshotted (r17): both queries
-    * re-ran the top-k aggregate over the full moment table per
-    * action. O(10·items) rows. */
+    * pairs, ties by item_y): item_x, item_y, corr, n, rn — the
+    * acceptance-metric twin of [[neighborTable]], shared by
+    * q_topk_neighbors, q_rec_ils (both pair-join sides) and
+    * q_rec_coverage, session-snapshotted (r17): each re-ran the top-k
+    * aggregate over the full moment table per action. `n` rides as
+    * graft_topk's payload, which never affects the (corr desc,
+    * item_y asc) ranking. O(10·items) rows. */
   private def ilsTop10(s: SparkSession, d: String): DataFrame =
-    Cache.getOrSnapshot(s, "rec_ils_top10", d) {
-      val sims = Moments.asDoubles(moments(s, d))
-        .withColumn("corr", corrCol)
-        .where(col("n") > 0)
-        .select(col("item_x"), col("item_y"), col("corr"), col("n"))
-      Ranking.topKAgg(sims, "item_x", col("corr"),
-          col("item_y"), lit(0L), 10)
-        .select(col("item_x"), col("tie").as("item_y"), col("rn"))
-    }
+    Cache.getOrSnapshot(s, "rec_ils_top10", d)(topCorr10(moments(s, d)))
+
+  /** The ranking [[ilsTop10]] snapshots, over moment frame `m`. */
+  private[graft] def topCorr10(m: DataFrame): DataFrame =
+    Ranking.topKAgg(corrPairs(m), "item_x", col("corr"), col("item_y"),
+        col("n"), 10)
+      .select(col("item_x"), col("tie").as("item_y"),
+        col("score").as("corr"), col("extra").as("n"), col("rn"))
+
+  /** item_x, item_y, corr, n of every n > 0 pair of moment frame `m`. */
+  private def corrPairs(m: DataFrame): DataFrame =
+    Moments.asDoubles(m)
+      .withColumn("corr", corrCol)
+      .where(col("n") > 0)
+      .select(col("item_x"), col("item_y"), col("corr"), col("n"))
 
   /** Weighted-sum top-5 serve over a neighbor table (in-session or
     * reloaded from the store) — shared by both rec-serve queries so
@@ -369,19 +381,15 @@ object SimQueries {
         .select(col("item_x"), col("item_y"), col("n"), corrCol.as("corr"))
         .orderBy(col("item_x"), col("item_y"))),
 
-    // The DECIMAL(38,0)-accumulating moment path, oracle-checked:
-    // identical values to q_sim_pearson at testdata magnitudes (the
-    // sums fit both representations) but a different physical
-    // aggregation (decimal buffers) — so the 100 TB overflow-safe
-    // variant is plan-exercised under the DuckDB oracle, not just
-    // property-tested (PropertySpec owns the adversarial magnitudes
-    // where LONG cannot even form a product term).
-    // Decimal moments come from their own aggregation pass, cached
-    // pre-filtered to this query's n>=2 population (r16 split — see
-    // the moments/momentsDec scaladocs: persisting the unfiltered
-    // 12.7M decimal rows cost 18 s of columnar encode for one
-    // consumer; the r8 verdict's 106 s figure was the pre-JIT-fix
-    // interpreted aggregate).
+    // The DECIMAL(38,0) moment path, oracle-checked: identical values
+    // to q_sim_pearson at testdata magnitudes. When the ratings'
+    // overflow bound holds (it does at sf0.001–sf0.1) the decimal
+    // moments are a cast of the LONG cache, so the oracle checks the
+    // cast; the decimal-buffer aggregation that runs past the bound
+    // is held by PropertySpec (adversarial magnitudes where LONG
+    // cannot even form a product term) and MomentsSpec (the fallback
+    // path of Moments.decMoments). Cached pre-filtered to this
+    // query's n>=2 population (see the momentsDec scaladoc).
     "q_sim_pearson_dec" -> ((s, d) =>
       Moments.asDoubles(momentsDec(s, d))
         .where(col("n") >= 2)
@@ -540,10 +548,7 @@ object SimQueries {
     // ranking step, no rater-count filters) — reuses the shared
     // moment table, which is exactly its unfiltered input.
     "q_movies_pipeline" -> ((s, d) => {
-      val m = Moments.asDoubles(moments(s, d))
-        .withColumn("corr", corrCol)
-        .where(col("n") > 0)
-      Ranking.withRank(m, "item_x", col("corr"), "item_y")
+      Ranking.withRank(corrPairs(moments(s, d)), "item_x", col("corr"), "item_y")
         .select(col("item_x"), col("item_y"), col("corr"), col("n"), col("rn"))
         .orderBy(col("item_x"), col("rn"))
     }),
@@ -622,18 +627,14 @@ object SimQueries {
     // R6/R7 as the capability the reference named but never shipped:
     // true per-item top-k neighbors. Sort-free ranking (r13 verdict
     // #1): the bounded-heap aggregate replaces the window's full
-    // local sort of the moment frame — Ranking.topKAgg scaladoc.
-    "q_topk_neighbors" -> ((s, d) => {
-      val sims = Moments.asDoubles(moments(s, d))
-        .withColumn("corr", corrCol)
-        .where(col("n") > 0)
-        .select(col("item_x"), col("item_y"), col("corr"), col("n"))
-      Ranking.topKAgg(sims, "item_x", col("corr"), col("item_y"),
-          col("n"), 10)
-        .select(col("item_x"), col("tie").as("item_y"),
-          col("score").as("corr"), col("extra").as("n"), col("rn"))
-        .orderBy(col("item_x"), col("rn"))
-    }),
+    // local sort of the moment frame — Ranking.topKAgg scaladoc. The
+    // ranking is the session's rec_ils_top10 snapshot, so a call
+    // reads 10·items rows instead of re-ranking the moment table.
+    "q_topk_neighbors" -> ((s, d) =>
+      ilsTop10(s, d)
+        .select(col("item_x"), col("item_y"), col("corr"), col("n"),
+          col("rn"))
+        .orderBy(col("item_x"), col("rn"))),
 
     // END-TO-END RECOMMENDATION SERVE — the consumer query the whole
     // reference pipeline exists to feed (Sarwar et al.'s item-based
@@ -709,10 +710,7 @@ object SimQueries {
     // sum (corr is r4'd → ·10⁴ is integral) so addition order never
     // matters.
     "q_rec_ils" -> ((s, d) => {
-      val sims = Moments.asDoubles(moments(s, d))
-        .withColumn("corr", corrCol)
-        .where(col("n") > 0)
-        .select(col("item_x"), col("item_y"), col("corr"), col("n"))
+      val sims = corrPairs(moments(s, d))
       // session snapshot (r17, was a per-action eager checkpoint):
       // `top` feeds BOTH pair-join sides — without materialization
       // the ranking over the full moment table runs twice (measured:

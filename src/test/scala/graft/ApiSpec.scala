@@ -733,11 +733,18 @@ class ApiSpec extends SparkSpec {
     // partial, no Window and no WindowGroupLimit (whose required child
     // ordering would re-introduce the full local sort of the moment
     // frame this path exists to avoid); the only Sort allowed is the
-    // oracle-compare orderBy ABOVE the aggregate, on the k·items rows
+    // oracle-compare orderBy ABOVE the aggregate, on the k·items rows.
+    // The query reads the session's rec_ils_top10 snapshot, so the
+    // aggregate is asserted on the snapshot's build (topCorr10)
+    val rank = graft.rel.SimQueries.topCorr10(
+      graft.rel.SimQueries.moments(spark, sf001))
+    val rankPlan = rank.queryExecution.executedPlan.toString
+    assert(rankPlan.contains("ObjectHashAggregate"), rankPlan)
+    assert(rankPlan.contains("graft_topk"), rankPlan)
+    assert(!rankPlan.contains("WindowGroupLimit"), rankPlan)
+    assert(!rankPlan.contains("Window "), rankPlan)
     val tk = SparkEntry.queries("q_topk_neighbors")(spark, sf001)
     val tkPlan = tk.queryExecution.executedPlan.toString
-    assert(tkPlan.contains("ObjectHashAggregate"), tkPlan)
-    assert(tkPlan.contains("graft_topk"), tkPlan)
     assert(!tkPlan.contains("WindowGroupLimit"), tkPlan)
     assert(!tkPlan.contains("Window "), tkPlan)
     assert(tk.collect().nonEmpty)

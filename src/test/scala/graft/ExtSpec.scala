@@ -1165,6 +1165,15 @@ class ExtSpec extends SparkSpec {
       java.nio.file.Paths.get(sf001).getFileName.toString)
   }
 
+  test("DialectFixtures renders under <user.dir>/target/dialect unless graft.fixture.dir is set") {
+    import graft.io.DialectFixtures
+    val userDir = sys.props("user.dir")
+    assert(DialectFixtures.baseDir(None) === s"$userDir/target/dialect")
+    assert(DialectFixtures.baseDir(Some("/tmp/fixtures")) === "/tmp/fixtures")
+    if (!sys.props.contains("graft.fixture.dir"))
+      assert(DialectFixtures.BaseDir.startsWith(userDir + "/"))
+  }
+
   test("recommender dict mapping falls back to shuffle join past the gate") {
     spark.conf.set("spark.graft.dict.broadcastMax", "0")
     try {

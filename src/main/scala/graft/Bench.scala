@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.SparkEnv
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -70,6 +71,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * (`CodeGenerator.compileTime`) go into the full record as
   * `codegen_compiles_{cold,warm}` and `codegen_compile_sec_{cold,warm}`,
   * so a full run shows how much of the warm pass still recompiles.
+  * Beside them, `broadcast_bytes_retained` is the storage memory that
+  * holds no cached RDD at the end of the run, read after full
+  * collections: on a local driver, the broadcasts that cached plans
+  * still pin ([[graft.core.Cache.getOrPersist]]).
   *
   * Timeout-proof (round-6 postmortem: rc-124 at ~49 min left NO numbers
   * because the only JSON was printed at process end):
@@ -183,6 +188,24 @@ object Bench {
   private def codegen(): (Long, Double) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       CodeGenerator.compileTime / 1e9)
+
+  /** Storage memory minus cached-RDD bytes once full collections stop
+    * freeing storage: the broadcast blocks still reachable. Spark's
+    * cleaner drops an unreachable broadcast only after a collection
+    * has found it, so this collects until a round frees nothing. */
+  private[graft] def broadcastBytesRetained(spark: SparkSession): Long = {
+    def collect(): Long = {
+      System.gc()
+      Thread.sleep(200) // lets the cleaner thread act on what was found
+      SparkEnv.get.memoryManager.storageMemoryUsed -
+        spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+    }
+    var prev = collect()
+    var cur = collect()
+    var i = 0
+    while (cur < prev && i < 5) { prev = cur; cur = collect(); i += 1 }
+    cur
+  }
 
   @volatile private var finalPrinted = false
   @volatile private var stopping = false
@@ -400,6 +423,7 @@ object Bench {
     val warmL = sweep("warm", math.max(budget * 0.95,
       elapsed + budget * 0.15))
     val cg2 = codegen()
+    val retained = broadcastBytesRetained(spark)
     val warmMeasured = warmL.map { case (n, s, _, _) => n -> s }
     val warmByName = warmMeasured.toMap
     val warmPartial = warmMeasured.size < cold.size
@@ -429,6 +453,7 @@ object Bench {
          |"codegen_compiles_warm":${cg2._1 - cg1._1},
          |"codegen_compile_sec_cold":${cg1._2 - cg0._2},
          |"codegen_compile_sec_warm":${cg2._2 - cg1._2},
+         |"broadcast_bytes_retained":$retained,
          |"warm_partial":$warmPartial,
          |"bench_only":${benchOnly.map(_.size).getOrElse(0)},
          |"median_override":${overrideMedian.isDefined},

@@ -74,9 +74,9 @@ object ExtQueries {
     * serve+truth plans. Values are unchanged by construction; the
     * scale gate grades the twins' first (build) runs, where the
     * serve+truth work actually happens. Snapshot (not persist): the
-    * twins' plans carry panel/centroid/shortlist broadcasts, and a
-    * persisted frame re-executes its broadcast futures on every
-    * action — lineage truncation is the whole point here. */
+    * twins' plans carry panel/centroid/shortlist broadcasts, which a
+    * persisted frame would keep alive for the session (the rule in
+    * [[Cache]]). */
   private[ext] def recallTable(s: SparkSession, d: String,
       variant: String, exact: => DataFrame, served: => DataFrame)
       : DataFrame =
@@ -229,9 +229,10 @@ object ExtQueries {
     * pipeline (see LmScore scaladoc), shared by q_lm_score and the
     * CCNet tercile split. Count tables and the per-doc frame are
     * session artifacts; the count-table join sides ride gated
-    * broadcasts (shuffle joins on the n-gram key past the gate). */
+    * broadcasts (shuffle joins on the n-gram key past the gate), so
+    * the per-doc frame is a Snapshot (the rule in [[Cache]]). */
   private[ext] def lmDocScores(s: SparkSession, d: String): DataFrame =
-    Cache.getOrPersist(s, "lm_doc_scores", d) {
+    Cache.getOrSnapshot(s, "lm_doc_scores", d) {
       val ws = split(col("text"), " ")
       val docBg = Cache.getOrPersist(s, "lm_doc_bigrams", d)(
         docs(s, d).where(size(ws) >= 2).select(col("doc_id"),
@@ -289,8 +290,10 @@ object ExtQueries {
     Cache.getOrPersist(s, "minhash_bandmins", d)(
       Dedup.minhashBandMinsFromHashes(shingleHashesC(s, d), 0, Dedup.Bands))
 
+  /** LSH candidate pairs; a Snapshot, since the build plans
+    * broadcast joins (the rule in [[Cache]]). */
   private[ext] def candidatesC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "minhash_cand", d)(
+    Cache.getOrSnapshot(s, "minhash_cand", d)(
       Dedup.minhashCandidates(bandMinsC(s, d)))
 
   /** One-row LSH bucket-cap read-out (r14 verdict #6), memoized like
@@ -336,16 +339,17 @@ object ExtQueries {
   /** Rescue-family band minima for the over-cap population,
     * materialized once per session: the candidate build references
     * them three times (cap filter + both self-join sides) and the
-    * rescue cap read-out aggregates them a fourth. */
+    * rescue cap read-out aggregates them a fourth. A Snapshot: the
+    * build plans broadcast joins (the rule in [[Cache]]). */
   private[ext] def rescueBandMinsC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "minhash_rescue_bandmins", d)(
+    Cache.getOrSnapshot(s, "minhash_rescue_bandmins", d)(
       Dedup.minhashRescueBandMins(
         shingleHashesC(s, d), bandMinsC(s, d), cap = RescueCap))
 
   /** Rescue candidate pairs, shared by the rescue query and its exact
-    * Jaccard rescore. */
+    * Jaccard rescore; a Snapshot like [[candidatesC]]. */
   private[ext] def rescueCandC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "minhash_rescue_cand", d)(
+    Cache.getOrSnapshot(s, "minhash_rescue_cand", d)(
       Dedup.minhashCandidates(rescueBandMinsC(s, d), RescueCap))
 
   /** One-row RESCUE-band cap read-out (r15 verdict #5): the primary
@@ -368,16 +372,18 @@ object ExtQueries {
       Dedup.simhash(docs(s, d)))
 
   /** Simhash near-dup pairs (primary partition, production cap),
-    * shared by the pair query and the cluster resolution query. */
+    * shared by the pair query and the cluster resolution query. A
+    * Snapshot: the build plans broadcast joins (the rule in [[Cache]]). */
   private[ext] def simhashPairsC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "simhash_pairs", d)(
+    Cache.getOrSnapshot(s, "simhash_pairs", d)(
       Dedup.simhashNearDups(simhashSigsC(s, d)))
 
   /** Rescue-pass pairs for members of over-cap simhash blocks (the
     * sf0.01 corpus trips the production cap for real: one block-3
-    * bucket holds all 500 docs — see Dedup.SimhashBlockCap). */
+    * bucket holds all 500 docs — see Dedup.SimhashBlockCap). A
+    * Snapshot: the build plans broadcast joins (the rule in [[Cache]]). */
   private[ext] def simhashRescueC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "simhash_rescue", d)(
+    Cache.getOrSnapshot(s, "simhash_rescue", d)(
       Dedup.simhashRescueNearDups(simhashSigsC(s, d)))
 
   /** The near-dup edge set (capped primary pairs ∪ rescue pairs,
@@ -393,9 +399,10 @@ object ExtQueries {
         .distinct())
 
   /** Banded sign-LSH pair cosines, shared by the near-dup pair query
-    * and the embedding-cluster resolution query. */
+    * and the embedding-cluster resolution query. A Snapshot: the build
+    * plans broadcast joins (the rule in [[Cache]]). */
   private[ext] def bandedCosC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "banded_cos", d)(
+    Cache.getOrSnapshot(s, "banded_cos", d)(
       VectorSearch.bandedPairCosine(emb(s, d)))
 
   /** Force the minhash chain (shingle-hash table → LSH candidates). */
@@ -419,9 +426,10 @@ object ExtQueries {
     * the inverted file itself, session-shared like the kmeans-cell
     * assignment (r17): q_ann_ivf re-assigned the whole corpus (N×cells
     * crossed argmax) on every action; a deploy builds the inverted
-    * lists once and serves probes against them. */
+    * lists once and serves probes against them. A Snapshot: the
+    * build broadcasts the cells (the rule in [[Cache]]). */
   private[ext] def ivfLabelAssignC(s: SparkSession, d: String): DataFrame =
-    Cache.getOrPersist(s, "ivf_label_assign", d) {
+    Cache.getOrSnapshot(s, "ivf_label_assign", d) {
       val cellsB = broadcast(labelCellsC(s, d)
         .select(col("label").cast("long").as("cell_id"), col("centroid"),
           VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
@@ -431,13 +439,15 @@ object ExtQueries {
 
   /** PQ codebook + code table, session-shared: a production deploy
     * persists both (they ARE the index); the codebook is O(M·k·dsub)
-    * rows at any corpus size, the codes N×M small integers. */
+    * rows at any corpus size, the codes N×M small integers. The
+    * codebook is persisted; the codes are a Snapshot, since encoding
+    * plans a broadcast join of the codebook (the rule in [[Cache]]). */
   private[ext] def pqCentC(s: SparkSession, d: String) =
     Cache.getOrPersist(s, "pq_codebook", d)(
       VectorSearch.pqTrain(emb(s, d).select(col("vec_id"), col("embedding"))))
 
   private[ext] def pqCodesC(s: SparkSession, d: String) =
-    Cache.getOrPersist(s, "pq_codes", d)(
+    Cache.getOrSnapshot(s, "pq_codes", d)(
       VectorSearch.pqEncode(
         emb(s, d).select(col("vec_id"), col("embedding")), pqCentC(s, d)))
 
@@ -450,8 +460,7 @@ object ExtQueries {
     * the one served. */
   private[ext] def ivfPqShortlistC(s: SparkSession, d: String) =
     // getOrSnapshot, not getOrPersist: the shortlist's build plan
-    // carries the broadcast cells — a persisted frame re-runs those
-    // broadcast stages on every downstream action (Cache scaladoc)
+    // broadcasts the cells (the rule in Cache)
     Cache.getOrSnapshot(s, "ivfpq_shortlist", d) {
       val e = emb(s, d).select(col("vec_id"), col("embedding"))
       val cells = labelCellsC(s, d)
@@ -1529,10 +1538,9 @@ object ExtQueries {
       val edges = candidatesC(s, d).select(col("d1"), col("d2"))
       // getOrSnapshot, not getOrPersist: the twin map and the
       // supernode aggregates sit above broadcast-bearing lineages
-      // (candidates LSH chain; the gated quotient builds), and a
-      // merely-persisted frame re-runs those broadcast stages on
-      // every downstream action (Cache.getOrSnapshot scaladoc) —
-      // measured 10 s/run on the warm perDoc join before truncation.
+      // (the gated quotient builds), which a persisted frame would
+      // pin for the session (the rule in Cache); the warm perDoc
+      // join measured 10 s/run before truncation.
       val vmap = Cache.getOrSnapshot(s, "tri_twins", d)(
         GraphRank.twinClasses(edges))
       // the structure check: two bounded counts, paid once per session

@@ -1,0 +1,69 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.commons.io.FileUtils
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.functions.{broadcast, col}
+
+/** What a session keeps once its work is done: the cached artifacts'
+  * rows, not the broadcasts their builds used, and a bounded status
+  * store. */
+class RetentionSpec extends SparkSpec {
+  /** The driver's broadcast blocks (values and pieces) with their
+    * in-memory bytes. */
+  private def broadcastBlocks(): Map[String, Long] = {
+    val bm = { spark.sparkContext; SparkEnv.get }.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast)
+      .flatMap(id => bm.getStatus(id).map(id.name -> _.memSize)).toMap
+  }
+
+  test("warmed ext components hold no broadcast block of 1 MiB or more " +
+    "once the cleaner has run") {
+    // A fresh copy of sf0.001: the session memo is keyed by dir, so
+    // the components build here whatever other suites have warmed.
+    val dir = Files.createTempDirectory("graft-retention").toFile
+    FileUtils.copyDirectory(new java.io.File(sf001), dir)
+    try {
+      val before = broadcastBlocks().keySet
+      val components = SparkEntry.sharedComponents.toMap
+      Seq("minhash", "simhash", "vectors", "shingle_postings", "lm_tables")
+        .foreach(c => components(c)(spark, dir.getPath))
+      // collects until the cleaner has freed what it can
+      Bench.broadcastBytesRetained(spark)
+      val big = broadcastBlocks().filter { case (id, bytes) =>
+        !before(id) && bytes >= 1L * 1024 * 1024
+      }
+      assert(big.isEmpty, "broadcast blocks the warmed artifacts still pin: " +
+        big.toSeq.sortBy(_._1).map { case (id, b) => s"$id=$b" }.mkString(", "))
+    } finally FileUtils.deleteQuietly(dir)
+  }
+
+  test("Bench.broadcastBytesRetained counts the broadcast a persisted " +
+    "frame's plan pins, not its cached rows") {
+    import spark.implicits._
+    val before = Bench.broadcastBytesRetained(spark)
+    // two LONG keys: an UnsafeHashedRelation, at least one 2 MiB page
+    val dim = (0L until 10L).map(i => (i, i * 7)).toDF("k1", "k2")
+    val joined = spark.range(0, 1000)
+      .select((col("id") % 10).as("k1"), (col("id") % 10 * 7).as("k2"))
+      .join(broadcast(dim), Seq("k1", "k2")).persist()
+    try {
+      assert(joined.count() == 1000)
+      val grown = Bench.broadcastBytesRetained(spark) - before
+      assert(grown >= 1L * 1024 * 1024, s"retained grew by $grown bytes")
+    } finally joined.unpersist(blocking = true)
+  }
+
+  test("the status store keeps at most the capped number of SQL executions") {
+    val cap = spark.conf.get("spark.sql.ui.retainedExecutions").toLong
+    assert(cap == 10)
+    val store = spark.asInstanceOf[classic.SparkSession].sharedState.statusStore
+    (1 to 3 * cap.toInt).foreach(i => spark.range(i).count())
+    // finished executions are dropped on the store's own thread
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (store.executionsCount() > cap && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(store.executionsCount() <= cap)
+  }
+}

@@ -6,21 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Benchmark main. Prints ONE compact JSON line (the driver contract)
-  * and writes the FULL result to `BENCH_FULL.json` in the repo root —
-  * rounds 2–4 lost their totals because the driver stores only a
-  * ~3 KB log tail and the full-precision line truncated mid-JSON, so
-  * the printed line is kept short (3-decimal times) and the complete
-  * record lives in the file.
+  * and writes the FULL result to `BENCH_FULL.json` in the repo root.
+  * A caller that keeps only a few KB of log tail still gets the whole
+  * printed line, so it is kept short (3-decimal times) and the
+  * complete record lives in the file.
   *
   * Two back-to-back timed sweeps: pass 1 lands one-time costs that
   * escaped the shared build (JIT, codegen caches, parquet footer
   * reads, persist fills); pass 2 — the `queries` field and the
-  * headline `value` — is the comparable number across rounds and
-  * hosts (the co-tenant noise postmortem in VERDICT r4: same code
-  * swung 2–4× between single-pass runs). `value` = `_shared_build` +
-  * warm-pass sum, matching BASELINE.md's accounting.
+  * headline `value` — is the comparable number across runs (single-
+  * pass runs of the same code swing with co-tenant noise). `value` =
+  * `_shared_build` + warm-pass sum, matching BASELINE.md's accounting.
   *
-  * Attribution (round-10 verdict #1): the session-shared snapshot
+  * Attribution: the session-shared snapshot
   * builds run FIRST, serially, one timer per NAMED component — the
   * `_shared:<name>` rows in `queries` — so no first-touch snapshot
   * cost ever lands on whichever query happens to run first in the
@@ -28,31 +26,25 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * row carries the 1-min load average at START and END (a 50 s
   * query's start stamp alone understates co-tenant noise).
   *
-  * The warm pass is NEVER skipped (round-10 verdict #1: a cold-only
-  * artifact cannot be band-compared). If the wall budget
+  * The warm pass is NEVER skipped (a cold-only record cannot be
+  * compared). If the wall budget
   * (`SPARK_GRAFT_TIME_BUDGET_SEC`, default 2100 s) runs short, the
   * warm sweep is TRUNCATED mid-pass instead — cheapest-first order
   * maximizes how many queries get a warm number, unreached queries
   * keep their cold time in the merged `queries` map, and the record
   * is flagged `warm_partial` with the measured count.
   *
-  * Load-transient guard (round-13 verdict #4): a shared build reading
-  * >1.5× the trailing-round median is rerun ONCE in a fresh session
+  * Load-transient guard: a shared build reading >1.5× the same-host
+  * baseline is rerun ONCE in a fresh session
   * — the rerun measures the build, not cache hits, because the first
   * session's caches die with its context. The first measurement
   * stays the recorded `shared_build_sec` (and `_shared_build`); the
   * rerun rides beside it as `shared_rerun_sec`, so a slower rerun can
-  * never replace it. The baseline (ADVICE r14: the original
-  * `_shared_build` regex matched NOTHING in the committed records —
-  * the driver stores the line escaped inside a truncated `tail`
-  * string) comes from [[sharedBaseline]]: BENCH_SHARED_HISTORY.jsonl
-  * (appended by every full run of this main — the durable source
-  * going forward — and read only for un-rerun lines of the same sf
-  * dir and core count), else escape-tolerant parsing of committed
-  * BENCH_r*.json tails (sum of the `shared_components` map, which
-  * survives truncation because it sits near the line's end), else
-  * BENCH_FULL.json's `shared_build_sec` when that record's `sf` and
-  * `cpus` (if it has one) match the run's; a missing baseline is
+  * never replace it. The baseline comes from [[sharedBaseline]]:
+  * BENCH_SHARED_HISTORY.jsonl (appended by every full run of this
+  * main, read only for un-rerun lines of the same sf dir and core
+  * count), else BENCH_FULL.json's `shared_build_sec` when that
+  * record states the run's `sf` and `cpus`; a missing baseline is
   * LOGGED, never a silent None.
   *
   * Test/iteration envs (all flagged in the record so a filtered run
@@ -62,8 +54,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    BENCH_FULL.json; the fire test must not clobber the cost-order
   *    source);
   *  - `SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE` — forces the guard's
-  *    baseline, validating the FIRE path end-to-end (r14 verdict #3:
-  *    only the no-false-positive half had ever run).
+  *    baseline, validating the FIRE path end-to-end.
   * Runs with any of these set do NOT append to the history file.
   *
   * Codegen: each sweep's generated-class compiles (Spark's
@@ -76,8 +67,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * collections: on a local driver, the broadcasts that cached plans
   * still pin ([[graft.core.Cache.getOrPersist]]).
   *
-  * Timeout-proof (round-6 postmortem: rc-124 at ~49 min left NO numbers
-  * because the only JSON was printed at process end):
+  * Timeout-proof (a run killed by a timeout still leaves numbers):
   *   - every finished query appends a line to `BENCH_PARTIAL.jsonl`;
   *   - a JVM shutdown hook prints the driver-contract line from whatever
   *     completed (marked `"partial":true`) if the normal print never ran —
@@ -87,22 +77,18 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object Bench {
   /** Repo root for records/partials: env override, else the launch
-    * cwd (sbt and gate.sh both run from the checkout) — never a
-    * hardcoded /root/repo (ADVICE r14: the same bug class gate.sh
-    * fixed — a wrong-checkout run read/wrote another repo's records). */
+    * cwd (sbt and gate.sh both run from the checkout), never a
+    * hardcoded path: a run from another checkout must read and write
+    * its own records. */
   private[graft] def repoDir: String =
     sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
       sys.props.getOrElse("user.dir", "."))
 
   /** Trailing shared-build baseline for the load-transient guard, in
     * precedence order; returns (seconds, source) so the guard can log
-    * WHAT it compared against. All parsing is escape-tolerant
-    * (`\\?"` matches both raw JSON and the driver's `tail`-escaped
-    * form) because the committed records store the printed line as an
-    * escaped string whose HEAD — including `_shared_build` — is
-    * usually truncated away; the `shared_components` map sits near
-    * the end and survives, and its sum IS the shared build.
-    */
+    * WHAT it compared against. Only records of the run's host shape
+    * count: with `cpus` given, a record that does not state that core
+    * count came from another host and is skipped. */
   private[graft] def sharedBaseline(dir: java.nio.file.Path,
       sfDir: Option[String] = None,
       cpus: Option[Int] = None): Option[(Double, String)] = {
@@ -114,11 +100,11 @@ object Bench {
     // (a) our own durable history: one line per completed full run.
     // Only first measurements that did not trip the guard count (a
     // tripped one is a transient by definition). Lines are filtered
-    // to the CURRENT sf dir when given (ADVICE r15: one full run
-    // against sf0.001 would otherwise inject a tiny shared-build time
-    // and skew the 1.5× guard baseline); lines without an sf field
-    // are kept for back-compat. With `cpus` given, only lines of that
-    // core count are kept: a line without one came from another host.
+    // to the CURRENT sf dir when given (one full run against sf0.001
+    // would otherwise inject a tiny shared-build time and skew the
+    // 1.5× guard baseline); lines without an sf field are kept for
+    // back-compat. With `cpus` given, only lines of that core count
+    // are kept: a line without one came from another host.
     val hist = dir.resolve("BENCH_SHARED_HISTORY.jsonl")
     val fromHist: Option[(Double, String)] = try {
       if (!Files.exists(hist)) None
@@ -135,27 +121,8 @@ object Bench {
         median(vals).map(_ -> s"history median of last ${math.min(5, vals.size)}")
       }
     } catch { case _: Throwable => None }
-    // (b) committed driver records: escaped, head-truncated tails
-    val fromRecords: Option[(Double, String)] = try {
-      val direct = """\\?"_shared_build\\?":([0-9.]+)""".r
-      val compObj = """\\?"shared_components\\?":\{(.*?)\}""".r
-      val pair = """\\?"[A-Za-z_0-9]+\\?":([0-9.]+)""".r
-      val vals = Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.matches("BENCH_r\\d+\\.json"))
-        .toSeq.sortBy(_.getFileName.toString)
-        .flatMap { p =>
-          val txt = Files.readString(p)
-          direct.findFirstMatchIn(txt).map(_.group(1).toDouble)
-            .orElse(compObj.findFirstMatchIn(txt).map(m =>
-              pair.findAllMatchIn(m.group(1))
-                .map(_.group(1).toDouble).sum).filter(_ > 0.0))
-        }.takeRight(5)
-      median(vals).map(_ ->
-        s"BENCH_r*.json median of last ${math.min(5, vals.size)}")
-    } catch { case _: Throwable => None }
-    // (c) the last local full record (single value, weakest), only
-    // when it was measured at the run's sf dir and, when it states
-    // one, the run's core count
+    // (b) the last local full record (single value, weakest), only
+    // when it states the run's sf dir and core count
     val fromFull: Option[(Double, String)] = try {
       val p = dir.resolve("BENCH_FULL.json")
       if (!Files.exists(p)) None
@@ -163,13 +130,13 @@ object Bench {
         val txt = Files.readString(p)
         val sameRun =
           sfDir.forall(want => sfRe.findFirstMatchIn(txt).exists(_.group(1) == want)) &&
-            cpus.forall(want => cpusRe.findFirstMatchIn(txt).forall(_.group(1).toInt == want))
+            cpus.forall(want => cpusRe.findFirstMatchIn(txt).exists(_.group(1).toInt == want))
         """"shared_build_sec":([0-9.]+)""".r.findFirstMatchIn(txt)
           .filter(_ => sameRun)
           .map(m => m.group(1).toDouble -> "BENCH_FULL.json shared_build_sec")
       }
     } catch { case _: Throwable => None }
-    fromHist.orElse(fromRecords).orElse(fromFull)
+    fromHist.orElse(fromFull)
   }
 
   /** One BENCH_SHARED_HISTORY.jsonl line. The first measurement is
@@ -329,19 +296,15 @@ object Bench {
     val shared = sharedRows.map(_._2).sum
     sharedSec = shared
 
-    // Shared-build load-transient guard (r13 verdict #4): the r13
-    // driver artifact's cold total carried a ~49 s shared-build
-    // transient (gate JVMs had just exited) that a serial re-measure
-    // reproduced away — the builder had to explain it in prose. If
-    // this round's shared total reads >1.5× the trailing-round
-    // median (committed BENCH_r*.json records), rerun it ONCE in a
-    // FRESH session (the caches die with the stopped context, so the
-    // rerun measures the build, not cache hits) and record the rerun
-    // beside the first measurement, which stays the recorded value.
-    // SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE: test-only forced baseline —
-    // the only way to exercise the fire path deterministically
-    // (r14 verdict #3); flagged via benchOnly/outName, never appended
-    // to history.
+    // Shared-build load-transient guard: if this run's shared total
+    // reads >1.5× the same-host baseline ([[sharedBaseline]]), rerun
+    // it ONCE in a FRESH session (the caches die with the stopped
+    // context, so the rerun measures the build, not cache hits) and
+    // record the rerun beside the first measurement, which stays the
+    // recorded value. SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE: test-only
+    // forced baseline, the only way to exercise the fire path
+    // deterministically; flagged via benchOnly/outName, never
+    // appended to history.
     val overrideMedian =
       sys.env.get("SPARK_GRAFT_SHARED_MEDIAN_OVERRIDE").map(_.toDouble)
     val trailingMedian: Option[Double] = overrideMedian.orElse {
@@ -352,8 +315,8 @@ object Bench {
           Some(v)
         case None =>
           System.err.println("[bench] no shared-build baseline found " +
-            "(checked BENCH_SHARED_HISTORY.jsonl, BENCH_r*.json, " +
-            "BENCH_FULL.json) - transient guard disabled this run")
+            "(checked BENCH_SHARED_HISTORY.jsonl, BENCH_FULL.json) - " +
+            "transient guard disabled this run")
           None
       }
     }

@@ -577,9 +577,7 @@ object ExtCurationQueries {
     // the same total order the kernel's descending-k strict
     // replacement realizes.
     "q_unigram_segment" -> ((s, d) =>
-      Cache.getOrPersist(s, "unigram_seg", d)(
-        Unigram.segmentsAll(docs(s, d), d))
-        .orderBy(col("word"))),
+      unigramSegC(s, d).orderBy(col("word"))),
 
     // Per-language fertility (pieces per word) under the unigram
     // model — the tokenizer-quality readout that decides whether a
@@ -587,8 +585,7 @@ object ExtCurationQueries {
     // the O(|distinct words|) broadcast segment table; text never
     // shuffles.
     "q_unigram_fertility" -> ((s, d) => {
-      val seg = Cache.getOrPersist(s, "unigram_seg", d)(
-        Unigram.segmentsAll(docs(s, d), d))
+      val seg = unigramSegC(s, d)
       docs(s, d)
         .select(col("lang"), explode(split(col("text"), " ")).as("word"))
         .join(broadcast(seg.select(col("word"), col("n_pieces"),
@@ -613,9 +610,7 @@ object ExtCurationQueries {
     // whose marked piece joins the vocab — greedy is a total order,
     // so `seg` strings match byte for byte.
     "q_wordpiece_segment" -> ((s, d) =>
-      Cache.getOrPersist(s, "wordpiece_seg", d)(
-        WordPiece.segmentsAll(docs(s, d), d))
-        .orderBy(col("word"))),
+      wordpieceSegC(s, d).orderBy(col("word"))),
 
     // Per-language WordPiece fertility — the third column of the
     // tokenizer-choice comparison (q_bpe_fertility /
@@ -623,8 +618,7 @@ object ExtCurationQueries {
     // segment-table join, so the three numbers are directly
     // comparable.
     "q_wordpiece_fertility" -> ((s, d) => {
-      val seg = Cache.getOrPersist(s, "wordpiece_seg", d)(
-        WordPiece.segmentsAll(docs(s, d), d))
+      val seg = wordpieceSegC(s, d)
       docs(s, d)
         .select(col("lang"), explode(split(col("text"), " ")).as("word"))
         .join(broadcast(seg.select(col("word"), col("n_pieces"))),
@@ -655,13 +649,7 @@ object ExtCurationQueries {
     // SemDeDup/topics family trains; same sqrt(sqrt(p³)) portability
     // trick, same fixed-point snap.
     "q_cluster_mix_weights" -> ((s, d) => {
-      val e = emb(s, d).select(col("vec_id"), col("embedding"))
-      val cells = Cache.getOrPersist(s, "kmeans_cells_8_2", d)(
-        VectorSearch.kmeansCells(e, k = 8, iters = 2))
-      val cellsB = broadcast(cells.select(col("cell_id"), col("centroid"),
-        VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
-      val byCell = Cache.getOrPersist(s, "semdedup_assign_8_2", d)(
-          VectorSearch.assignCells(e, cellsB))
+      val byCell = semdedupAssignC(s, d)
         .groupBy(col("cell_id")).agg(count(lit(1)).as("n_docs"))
       val tot = byCell.agg(sum(col("n_docs")).as("tot"))
       val p = col("n_docs").cast("double") / col("tot").cast("double")
@@ -935,9 +923,7 @@ object ExtCurationQueries {
     // Snapshot-cached like the other CC fixpoints — the resolved
     // frame is a session artifact shared with q_er_quality.
     "q_entity_resolution" -> ((s, d) =>
-      EntityResolution.clusterAudit(
-        Cache.getOrSnapshot(s, "er_resolved", d)(
-          EntityResolution.resolved(s, d)))),
+      EntityResolution.clusterAudit(erResolvedC(s, d))),
 
     // ER acceptance pair (the lsh_recall/precision discipline applied
     // to identity): pairwise precision AND recall vs the held-out
@@ -949,9 +935,7 @@ object ExtCurationQueries {
     // number (precision misses when nation+segment also agree) —
     // the numbers a deploy decision actually weighs.
     "q_er_quality" -> ((s, d) =>
-      EntityResolution.qualityRow(
-        Cache.getOrSnapshot(s, "er_resolved", d)(
-          EntityResolution.resolved(s, d)))),
+      EntityResolution.qualityRow(erResolvedC(s, d))),
 
     // Audio content fingerprint, scored CELL-EXACT: the WAV fixture's
     // PCM samples are a sawtooth that is pure arithmetic in

@@ -112,11 +112,8 @@ object ExtQueries {
 
   /** Known-item probe terms — per probe doc (doc_id % 101 = 3) its
     * rarest term by (df, w): (probe, w, df). Shared by both retrieval
-    * evaluations (r16: q_retrieval_mrr and q_retrieval_ndcg rebuilt
-    * this subplan AND the scored candidate set below per action,
-    * ~1.2–1.9 s warm each at sf0.1; one snapshot pair serves both).
-    * O(probes) rows; snapshot, not persist — the build carries
-    * broadcasts. */
+    * evaluations with the scored candidate set below. O(probes) rows;
+    * snapshot, not persist — the build carries broadcasts. */
   private[ext] def bm25PtermC(s: SparkSession, d: String): DataFrame =
     Cache.getOrSnapshot(s, "bm25_pterm", d) {
       val tf = bm25TfC(s, d)
@@ -141,41 +138,62 @@ object ExtQueries {
     * simultaneously the best query and the cost cap). */
   private[ext] def bm25CandC(s: SparkSession, d: String): DataFrame =
     Cache.getOrSnapshot(s, "bm25_cand", d) {
-      val tf = bm25TfC(s, d)
-      val dlen = Cache.getOrPersist(s, "bm25_dlen", d)(
-        tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
-      val stats = dlen.agg(count(lit(1)).as("nn"),
-          sum(col("len")).as("tot"))
-        .select(col("nn"), expr("(tot * 1000) div nn").as("avgfx"))
       val pterm = bm25PtermC(s, d)
-      val qidf = pterm.select(col("w"), col("df")).distinct()
-        .crossJoin(broadcast(stats))
-        .withColumn("xfx",
-          expr(s"CAST((CAST((nn + 1) * 2 AS DECIMAL(38,0)) * " +
-            s"${LmScore.PScale}) div (2 * df + 1) AS BIGINT)"))
-        .withColumn("e", length(conv(col("xfx"), 10, 2)).cast("long"))
-        .withColumn("m", expr(s"(xfx * ${LmScore.MScale}L) div " +
-          "shiftleft(1L, CAST(e - 1 AS INT))"))
-        .withColumn("idf_fx", (col("e") - 1) * lit(LmScore.LogScale)
-          + element_at(typedLit(LmScore.Log2Table),
-              (col("m") - lit(LmScore.MScale - 1)).cast("int"))
-          - lit(LmScore.L9Fx))
-        .select(col("w"), col("idf_fx"))
-      tf.join(broadcast(pterm.select(col("probe"), col("w"))), Seq("w"))
-        .join(broadcast(qidf), Seq("w"))
-        .join(dlen, Seq("doc_id"))
-        .crossJoin(broadcast(stats))
-        .withColumn("tfpart",
-          col("tf").cast("double") * lit(2.2) /
-            (col("tf").cast("double") + lit(1.2) *
-              (lit(0.25) + lit(0.75) * col("len").cast("double") /
-                (col("avgfx").cast("double") / lit(1000.0)))))
-        .withColumn("cfx",
-          floor(col("idf_fx").cast("double") * col("tfpart") + lit(0.5))
-            .cast("long"))
+      val stats = bm25Stats(s, d)
+      bm25Contrib(s, d,
+        bm25TfC(s, d).join(broadcast(pterm.select(col("probe"), col("w"))), Seq("w")),
+        bm25IdfFx(pterm.select(col("w"), col("df")).distinct(), stats), stats)
         .select(col("probe"), col("w"), col("doc_id"), col("tf"),
           col("cfx"))
     }
+
+  /** Per-doc token count (doc_id, len) over [[bm25TfC]]: BM25's length
+    * normalizer, shared by the retrieval query and the evaluations. */
+  private[ext] def bm25DlenC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "bm25_dlen", d)(
+      bm25TfC(s, d).groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
+
+  /** One row (nn, avgfx): the corpus's doc count and its average doc
+    * length in 1/1000 token units. */
+  private def bm25Stats(s: SparkSession, d: String): DataFrame =
+    bm25DlenC(s, d).agg(count(lit(1)).as("nn"), sum(col("len")).as("tot"))
+      .select(col("nn"), expr("(tot * 1000) div nn").as("avgfx"))
+
+  /** Lucene's BM25 idf, log2((N+1)/(df+0.5)), as an LmScore fixed-point
+    * BIGINT for every (w, df) row: (w, idf_fx). The ratio goes through
+    * a DECIMAL(38,0) product, since (nn+1)·2·1e9 passes 2^63 at about
+    * 4.6e9 docs; the log rides the bit-length/mantissa table, so no
+    * ln() crosses the oracle boundary. */
+  private def bm25IdfFx(wdf: DataFrame, stats: DataFrame): DataFrame =
+    wdf.crossJoin(broadcast(stats))
+      .withColumn("xfx",
+        expr(s"CAST((CAST((nn + 1) * 2 AS DECIMAL(38,0)) * " +
+          s"${LmScore.PScale}) div (2 * df + 1) AS BIGINT)"))
+      .withColumn("e", length(conv(col("xfx"), 10, 2)).cast("long"))
+      .withColumn("m", expr(s"(xfx * ${LmScore.MScale}L) div " +
+        "shiftleft(1L, CAST(e - 1 AS INT))"))
+      .withColumn("idf_fx", (col("e") - 1) * lit(LmScore.LogScale)
+        + element_at(typedLit(LmScore.Log2Table),
+            (col("m") - lit(LmScore.MScale - 1)).cast("int"))
+        - lit(LmScore.L9Fx))
+      .select(col("w"), col("idf_fx"))
+
+  /** `postings` (…, w, doc_id, tf) with each row's BM25 contribution
+    * `cfx` (k1 = 1.2, b = 0.75): IEEE-exact tf saturation times the
+    * term's idf, snapped to a BIGINT before any sum. */
+  private def bm25Contrib(s: SparkSession, d: String, postings: DataFrame,
+      qidf: DataFrame, stats: DataFrame): DataFrame =
+    postings.join(broadcast(qidf), Seq("w"))
+      .join(bm25DlenC(s, d), Seq("doc_id"))
+      .crossJoin(broadcast(stats))
+      .withColumn("tfpart",
+        col("tf").cast("double") * lit(2.2) /
+          (col("tf").cast("double") + lit(1.2) *
+            (lit(0.25) + lit(0.75) * col("len").cast("double") /
+              (col("avgfx").cast("double") / lit(1000.0)))))
+      .withColumn("cfx",
+        floor(col("idf_fx").cast("double") * col("tfpart") + lit(0.5))
+          .cast("long"))
 
   /** Layer-0 NSW neighbor graph snapshot (graph-ANN serving
     * structure) — shared by the flat serve, its recall twin, and
@@ -233,26 +251,11 @@ object ExtQueries {
     * the per-doc frame is a Snapshot (the rule in [[Cache]]). */
   private[ext] def lmDocScores(s: SparkSession, d: String): DataFrame =
     Cache.getOrSnapshot(s, "lm_doc_scores", d) {
-      val ws = split(col("text"), " ")
-      val docBg = Cache.getOrPersist(s, "lm_doc_bigrams", d)(
-        docs(s, d).where(size(ws) >= 2).select(col("doc_id"),
-          explode(transform(sequence(lit(1), size(ws) - 1), i =>
-            struct(element_at(ws, i).as("w1"),
-              concat_ws(" ", element_at(ws, i), element_at(ws, i + 1))
-                .as("bg")))).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"),
-            col("b.bg").as("bg")))
-      val bgCounts = Cache.getOrPersist(s, "lm_bigram_counts", d)(
-        docBg.groupBy(col("bg")).agg(count(lit(1)).as("c12")))
-      val ugCounts = Cache.getOrPersist(s, "lm_unigram_counts", d)(
-        docs(s, d).select(explode(split(col("text"), " ")).as("w1"))
-          .groupBy(col("w1")).agg(count(lit(1)).as("c1")))
+      val ugCounts = lmUnigramCountsC(s, d)
       val vocab = ugCounts.agg(count(lit(1)).as("v"))
-      def gate(tag: String, f: DataFrame) = graft.core.Broadcasts
-        .gatedMemo(f, "spark.graft.lm.broadcastMax", s"lm_$tag:$d")
-      docBg
-        .join(gate("bg", bgCounts), Seq("bg"))
-        .join(gate("ug", ugCounts), Seq("w1"))
+      lmDocBigramsC(s, d)
+        .join(lmGate(d, "bg", lmBigramCountsC(s, d)), Seq("bg"))
+        .join(lmGate(d, "ug", ugCounts), Seq("w1"))
         .crossJoin(broadcast(vocab))
         .withColumn("pfx", greatest(
           expr(s"((c12 + 1) * ${LmScore.PScale}L) div (c1 + v)"), lit(1L)))
@@ -270,6 +273,34 @@ object ExtQueries {
         .withColumn("avg_bits", Det.r4(
           col("avg_nl2fx").cast("double") / lit(LmScore.LogScale.toDouble)))
     }
+
+  /** Every adjacent word pair of every doc: (doc_id, w1, bg). */
+  private[ext] def lmDocBigramsC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "lm_doc_bigrams", d) {
+      val ws = split(col("text"), " ")
+      docs(s, d).where(size(ws) >= 2).select(col("doc_id"),
+          explode(transform(sequence(lit(1), size(ws) - 1), i =>
+            struct(element_at(ws, i).as("w1"),
+              concat_ws(" ", element_at(ws, i), element_at(ws, i + 1))
+                .as("bg")))).as("b"))
+        .select(col("doc_id"), col("b.w1").as("w1"), col("b.bg").as("bg"))
+    }
+
+  /** Corpus bigram counts (bg, c12). */
+  private[ext] def lmBigramCountsC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "lm_bigram_counts", d)(
+      lmDocBigramsC(s, d).groupBy(col("bg")).agg(count(lit(1)).as("c12")))
+
+  /** Corpus unigram counts (w1, c1). */
+  private[ext] def lmUnigramCountsC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "lm_unigram_counts", d)(
+      docs(s, d).select(explode(split(col("text"), " ")).as("w1"))
+        .groupBy(col("w1")).agg(count(lit(1)).as("c1")))
+
+  /** An LM count table as a join side, broadcast while its memoized
+    * row count stays under `spark.graft.lm.broadcastMax`. */
+  private def lmGate(d: String, tag: String, f: DataFrame): DataFrame =
+    graft.core.Broadcasts.gatedMemo(f, "spark.graft.lm.broadcastMax", s"lm_$tag:$d")
 
   /** Shared dedup intermediates, materialized once per session. The
     * corpus-sized cache is the (doc_id, h) HASH projection, not the
@@ -398,6 +429,15 @@ object ExtQueries {
         .unionByName(simhashRescueC(s, d).select(col("d1"), col("d2")))
         .distinct())
 
+  /** Near-dup clusters over [[simhashEdgesC]]: (doc_id, cluster_id),
+    * the component's smallest doc_id, by min-label propagation. A
+    * Snapshot, so a consumer scans the converged map instead of
+    * re-running the iteration. */
+  private[ext] def ccClustersC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrSnapshot(s, "cc_clusters", d)(
+      Dedup.connectedComponents(
+        docs(s, d).select(col("doc_id")), simhashEdgesC(s, d)))
+
   /** Banded sign-LSH pair cosines, shared by the near-dup pair query
     * and the embedding-cluster resolution query. A Snapshot: the build
     * plans broadcast joins (the rule in [[Cache]]). */
@@ -471,18 +511,38 @@ object ExtQueries {
         .select(col("qid"), col("vec_id"))
     }
 
-  /** Force the trained quantizers (q_ann_kmeans's codebook, the PQ
-    * codebook + codes — session-shared artifacts like the LSH
-    * tables), the label-centroid quantizer with its inverted file
-    * (r17) and the composed IVF-PQ shortlist snapshot — otherwise
-    * their first touch lands on whichever IVF serve runs first in a
-    * cold sweep. */
+  /** The trained k-means quantizer (8 cells, 2 rounds): (cell_id,
+    * centroid). One codebook for SemDeDup, the k-means IVF serve,
+    * filtered ANN and the cluster read-outs, so they all agree on the
+    * partition of the space. Its build runs jobs (each round is an
+    * eager local checkpoint), so a caller that may not need it keeps
+    * the call lazy. */
+  private[ext] def kmeansCellsC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "kmeans_cells_8_2", d)(
+      VectorSearch.kmeansCells(
+        emb(s, d).select(col("vec_id"), col("embedding")), k = 8, iters = 2))
+
+  /** [[kmeansCellsC]] with each centroid's fixed-point norm, hinted
+    * broadcast: the probe side of every assignment against it. */
+  private[ext] def kmeansCellsB(s: SparkSession, d: String): DataFrame =
+    broadcast(kmeansCellsC(s, d).select(col("cell_id"), col("centroid"),
+      VectorSearch.fixedNormSq(col("centroid")).as("cnrm")))
+
+  /** Every vector's nearest [[kmeansCellsC]] cell: (cell_id, vec_id,
+    * embedding, enrm). The SemDeDup plan reads it four times. A
+    * Snapshot: the build broadcasts the cells (the rule in [[Cache]]). */
+  private[ext] def semdedupAssignC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrSnapshot(s, "semdedup_assign_8_2", d)(
+      VectorSearch.assignCells(
+        emb(s, d).select(col("vec_id"), col("embedding")), kmeansCellsB(s, d)))
+
+  /** Force the trained quantizers (the k-means codebook, the PQ
+    * codebook + codes), the label-centroid quantizer with its inverted
+    * file and the composed IVF-PQ shortlist snapshot, so their first
+    * touch does not land on whichever IVF serve runs first. */
   def warmVectors(spark: SparkSession, dir: String): Unit =
     Cache.forceAll(spark)(
-      () => Cache.getOrPersist(spark, "kmeans_cells_8_2", dir)(
-        VectorSearch.kmeansCells(
-          emb(spark, dir).select(col("vec_id"), col("embedding")),
-          k = 8, iters = 2)).count(),
+      () => kmeansCellsC(spark, dir).count(),
       () => {
         labelCellsC(spark, dir).count()
         Cache.forceAll(spark)(
@@ -503,13 +563,6 @@ object ExtQueries {
       },
       () => bandedCosC(spark, dir).count())
 
-  /** Force this module's session-shared intermediates (shingle table,
-    * LSH candidate pairs) — see [[graft.rel.SimQueries.warm]]. */
-  def warm(spark: SparkSession, dir: String): Unit = {
-    warmMinhash(spark, dir)
-    warmSimhash(spark, dir)
-  }
-
   /** Force the string-shingle postings snapshots (distinct (doc,
     * shingle) set + rescue candidate pairs) — the first-touch cost
     * that otherwise lands on whichever of q_decontaminate /
@@ -522,7 +575,7 @@ object ExtQueries {
 
   /** Force the bigram-LM count tables + per-doc score frame beside the
     * BM25 term-frequency postings and the retrieval evaluations'
-    * shared probe-term + candidate snapshots (r16) — the q_lm_score /
+    * shared probe-term + candidate snapshots — the q_lm_score /
     * q_token_entropy / q_bm25_retrieval / q_retrieval_* first-touch
     * builds. */
   def warmLmTables(spark: SparkSession, dir: String): Unit =
@@ -550,6 +603,20 @@ object ExtQueries {
       () => graft.io.VideoFixtures.write(spark, dir),
       () => graft.io.PhashFixtures.write(spark, dir),
       () => graft.io.DialectFixtures.writeDocsHtml(spark, dir))
+
+  /** Unigram-LM Viterbi segmentation of every distinct corpus word. */
+  private[ext] def unigramSegC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "unigram_seg", d)(Unigram.segmentsAll(docs(s, d), d))
+
+  /** WordPiece greedy longest-match segmentation of every distinct
+    * corpus word. */
+  private[ext] def wordpieceSegC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrPersist(s, "wordpiece_seg", d)(WordPiece.segmentsAll(docs(s, d), d))
+
+  /** The resolved entity-resolution frame, shared by the cluster audit
+    * and its quality read-out; a Snapshot like the other CC fixpoints. */
+  private[ext] def erResolvedC(s: SparkSession, d: String): DataFrame =
+    Cache.getOrSnapshot(s, "er_resolved", d)(EntityResolution.resolved(s, d))
 
   /** q_dataset_mix rates (shared by query and oracle). */
   private[ext] val MixRates =
@@ -1449,15 +1516,8 @@ object ExtQueries {
     // the component's smallest doc_id (= the keep-first keeper).
     // Edges = capped primary pairs ∪ rescue pairs — the full guarded
     // chain, not the uncapped quadratic join.
-    // The converged (doc_id, cluster_id) map is a session graph
-    // artifact like tri_quot_aggs: deterministic per dir, rebuilt by
-    // min-label iteration on every call otherwise (3.4 s warm at
-    // sf0.1). getOrSnapshot so downstream actions pay a bare scan.
     "q_dedup_clusters" -> ((s, d) =>
-      Cache.getOrSnapshot(s, "cc_clusters", d)(
-          Dedup.connectedComponents(
-            docs(s, d).select(col("doc_id")),
-            simhashEdgesC(s, d)))
+      ccClustersC(s, d)
         .withColumn("is_keeper",
           (col("doc_id") === col("cluster_id")).cast("long"))
         .orderBy(col("doc_id"))),
@@ -1478,9 +1538,7 @@ object ExtQueries {
     // find out HERE, not from eval contamination later.
     "q_leakage_free_split" -> ((s, d) => {
       import graft.core.PortableHash
-      val clusters = Cache.getOrSnapshot(s, "cc_clusters", d)(
-        Dedup.connectedComponents(
-          docs(s, d).select(col("doc_id")), simhashEdgesC(s, d)))
+      val clusters = ccClustersC(s, d)
       val sp = PortableHash.spread(PortableHash.h(
         concat(lit("split:"), col("cluster_id").cast("string"))))
       val assigned = clusters.select(col("doc_id"), col("cluster_id"),
@@ -1860,21 +1918,8 @@ object ExtQueries {
     // TakeOrderedAndProject, never a global sort; count tables join
     // behind the same broadcast gates as q_lm_score.
     "q_pmi_bigrams" -> ((s, d) => {
-      val ws = split(col("text"), " ")
-      val docBg = Cache.getOrPersist(s, "lm_doc_bigrams", d)(
-        docs(s, d).where(size(ws) >= 2).select(col("doc_id"),
-          explode(transform(sequence(lit(1), size(ws) - 1), i =>
-            struct(element_at(ws, i).as("w1"),
-              concat_ws(" ", element_at(ws, i), element_at(ws, i + 1))
-                .as("bg")))).as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.bg").as("bg")))
-      val bgCounts = Cache.getOrPersist(s, "lm_bigram_counts", d)(
-        docBg.groupBy(col("bg")).agg(count(lit(1)).as("c12")))
-      val ugCounts = Cache.getOrPersist(s, "lm_unigram_counts", d)(
-        docs(s, d).select(explode(split(col("text"), " ")).as("w1"))
-          .groupBy(col("w1")).agg(count(lit(1)).as("c1")))
-      def gate(tag: String, f: DataFrame) = graft.core.Broadcasts
-        .gatedMemo(f, "spark.graft.lm.broadcastMax", s"lm_$tag:$d")
+      val bgCounts = lmBigramCountsC(s, d)
+      val ugCounts = lmUnigramCountsC(s, d)
       val totals = broadcast(
         ugCounts.agg(sum(col("c1")).as("wtot"))
           .crossJoin(bgCounts.agg(sum(col("c12")).as("btot"))))
@@ -1882,8 +1927,8 @@ object ExtQueries {
       bgCounts.where(col("c12") >= lit(PmiMinCount))
         .withColumn("w1", element_at(split(col("bg"), " "), 1))
         .withColumn("w2", element_at(split(col("bg"), " "), 2))
-        .join(gate("ug", ugCounts), Seq("w1"))
-        .join(gate("ug2", ugCounts.select(col("w1").as("w2"),
+        .join(lmGate(d, "ug", ugCounts), Seq("w1"))
+        .join(lmGate(d, "ug2", ugCounts.select(col("w1").as("w2"),
           col("c1").as("c2"))), Seq("w2"))
         .crossJoin(totals)
         .withColumn("pmi_fx",
@@ -1939,41 +1984,13 @@ object ExtQueries {
       // INDEX — session artifacts like the PQ codebook; per-query
       // work is the joins + contribution sum below
       val tf = bm25TfC(s, d)
-      val dlen = Cache.getOrPersist(s, "bm25_dlen", d)(
-        tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("len")))
-      val stats = dlen.agg(count(lit(1)).as("nn"), sum(col("len")).as("tot"))
-        .select(col("nn"), expr("(tot * 1000) div nn").as("avgfx"))
+      val stats = bm25Stats(s, d)
       // snapshot (not persist): the 5-row idf table sits above the
       // broadcast(stats) lineage and a df agg over the postings
       val qidf = Cache.getOrSnapshot(s, "bm25_qidf", d)(
-        tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-          .orderBy(col("df").desc, col("w")).limit(5)
-          .crossJoin(broadcast(stats))
-          // DECIMAL(38,0) intermediate: (nn+1)·2·1e9 passes 2^63 at
-          // ~4.6e9 docs; the RATIO (xfx) stays BIGINT-sized for any
-          // real (N, df), only the product needs headroom
-          .withColumn("xfx",
-            expr(s"CAST((CAST((nn + 1) * 2 AS DECIMAL(38,0)) * " +
-              s"${LmScore.PScale}) div (2 * df + 1) AS BIGINT)"))
-          .withColumn("e", length(conv(col("xfx"), 10, 2)).cast("long"))
-          .withColumn("m", expr(s"(xfx * ${LmScore.MScale}L) div " +
-            "shiftleft(1L, CAST(e - 1 AS INT))"))
-          .withColumn("idf_fx", (col("e") - 1) * lit(LmScore.LogScale)
-            + element_at(typedLit(LmScore.Log2Table),
-                (col("m") - lit(LmScore.MScale - 1)).cast("int"))
-            - lit(LmScore.L9Fx))
-          .select(col("w"), col("idf_fx")))
-      tf.join(broadcast(qidf), Seq("w"))
-        .join(dlen, Seq("doc_id"))
-        .crossJoin(broadcast(stats))
-        .withColumn("tfpart",
-          col("tf").cast("double") * lit(2.2) /
-            (col("tf").cast("double") + lit(1.2) *
-              (lit(0.25) + lit(0.75) * col("len").cast("double") /
-                (col("avgfx").cast("double") / lit(1000.0)))))
-        .withColumn("cfx",
-          floor(col("idf_fx").cast("double") * col("tfpart") + lit(0.5))
-            .cast("long"))
+        bm25IdfFx(tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
+          .orderBy(col("df").desc, col("w")).limit(5), stats))
+      bm25Contrib(s, d, tf, qidf, stats)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_qterms"), sum(col("cfx")).as("score_fx"))
         .orderBy(col("score_fx").desc, col("doc_id")).limit(10)
@@ -1997,7 +2014,7 @@ object ExtQueries {
     "q_retrieval_mrr" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       // probe terms + scored candidates from the session snapshots
-      // shared with q_retrieval_ndcg (r16 — see bm25PtermC/bm25CandC)
+      // shared with q_retrieval_ndcg (see bm25PtermC/bm25CandC)
       val cand = bm25CandC(s, d)
       val rw = Window.partitionBy(col("probe"))
         .orderBy(col("cfx").desc, col("doc_id"))
@@ -2027,7 +2044,7 @@ object ExtQueries {
       import org.apache.spark.sql.expressions.Window
       val S = LmScore.LogScale
       // the SAME session-snapshot candidate sets q_retrieval_mrr
-      // ranks (r16 — see bm25PtermC/bm25CandC)
+      // ranks (see bm25PtermC/bm25CandC)
       val cand = bm25CandC(s, d)
       val served = Window.partitionBy(col("probe"))
         .orderBy(col("cfx").desc, col("doc_id"))

@@ -38,7 +38,7 @@ object SimQueries {
 
   /** In-memory ratings for point consumers — re-reads the bucketed
     * table (cheap scan) so the view's lineitem⋈orders agg runs once. */
-  private[rel] def ratings(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def ratings(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrPersist(spark, "ratings", dir)(ratingsBucketed(spark, dir))
 
   /** The LONG pair-moment cache (the 7 similarity queries, ranking,

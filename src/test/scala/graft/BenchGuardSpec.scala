@@ -1,48 +1,20 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared-build transient guard's baseline derivation (ADVICE
-  * r14: the original regex matched NOTHING in the committed records —
-  * the driver stores the printed line escaped inside a truncated
-  * `tail` field — so the guard was dead code; r14 verdict #3: the
-  * fire path had never been validated). Pure-file tests, no session.
-  */
+/** The shared-build transient guard's baseline derivation: only
+  * same-sf, same-host records count. Pure-file tests, no session. */
 class BenchGuardSpec extends AnyFunSuite {
 
   private def tmpDir(): java.nio.file.Path =
     Files.createTempDirectory("graft-benchguard")
 
-  test("escaped, head-truncated driver records parse via the " +
-    "shared_components sum") {
-    val d = tmpDir()
-    // the committed shape: tail is an escaped string whose head
-    // (including _shared_build) is truncated away; shared_components
-    // survives near the end of the line
-    Files.writeString(d.resolve("BENCH_r07.json"),
-      """{"n":7,"rc":0,"tail":"\":0.461,\"q_x\":0.5,""" +
-        """\"shared_components\":{\"sim\":19.9,\"minhash\":5.1,""" +
-        """\"media\":0.0},\"sf\":\"/x\",\"cold_total\":307.5}\n"}""")
-    val got = Bench.sharedBaseline(d)
-    assert(got.isDefined, "must parse the escaped record")
-    assert(math.abs(got.get._1 - 25.0) < 1e-9, got)
-    assert(got.get._2.contains("BENCH_r*.json"))
-  }
-
-  test("unescaped _shared_build still matches (older/raw records)") {
-    val d = tmpDir()
-    Files.writeString(d.resolve("BENCH_r03.json"),
-      """{"queries":{"_shared_build":42.5,"q_a":1.0}}""")
-    val got = Bench.sharedBaseline(d)
-    assert(got.isDefined && math.abs(got.get._1 - 42.5) < 1e-9, got)
-  }
-
   test("history file takes precedence over records and yields the " +
     "median of the last 5") {
     val d = tmpDir()
-    Files.writeString(d.resolve("BENCH_r01.json"),
-      """{"queries":{"_shared_build":999.0}}""")
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"sf":"/x","cpus":4,"shared_build_sec":999.0}""")
     Files.writeString(d.resolve("BENCH_SHARED_HISTORY.jsonl"),
       (1 to 7).map(i =>
         s"""{"shared_build_sec":$i.000,"rerun":false,"sf":"/x"}""")
@@ -122,14 +94,13 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(got.get._2.contains("BENCH_FULL"))
   }
 
-  test("BENCH_FULL.json counts only when its sf matches the run's and " +
-    "its cpus, when present, do too") {
+  test("BENCH_FULL.json counts only when its sf and its stated cpus " +
+    "match the run's") {
     val d = tmpDir()
     Files.writeString(d.resolve("BENCH_FULL.json"),
-      """{"metric":"total","sf":"/t/sf0.1","shared_build_sec":540.2,"x":1}""")
+      """{"metric":"total","sf":"/t/sf0.1","cpus":4,"shared_build_sec":540.2,"x":1}""")
     // the sf0.1 rerun value must not gate an sf0.01 run
     assert(Bench.sharedBaseline(d, Some("/t/sf0.01"), Some(4)).isEmpty)
-    // same sf, no stated core count: still the last resort
     assert(Bench.sharedBaseline(d, Some("/t/sf0.1"), Some(4)).map(_._1) === Some(540.2))
     Files.writeString(d.resolve("BENCH_FULL.json"),
       """{"metric":"total","sf":"/t/sf0.01","cpus":32,"shared_build_sec":60.0}""")
@@ -139,16 +110,17 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(got.get._2.contains("BENCH_FULL"))
   }
 
-  test("the REAL committed records in this checkout produce a baseline") {
-    val repo = Paths.get(Bench.repoDir)
-    assume(Files.exists(repo.resolve("BENCH_r14.json")))
-    // ignore any history file (may not exist yet in this round) —
-    // prove the record-parsing leg works on the genuine artifacts
-    // the r14 ADVICE showed the old regex matched nothing in
-    val got = Bench.sharedBaseline(repo)
-    assert(got.isDefined, "committed records must yield a baseline")
-    // a plausible shared build: r12–r14 measured 49–140 s
-    assert(got.get._1 > 5.0 && got.get._1 < 500.0, got)
+  test("with cpus given, BENCH_r*.json tails and a BENCH_FULL.json " +
+    "without cpus yield no baseline") {
+    val d = tmpDir()
+    // the committed shapes from another host: a driver tail whose
+    // shared_components sum is 25 s, and a full record with no cpus
+    Files.writeString(d.resolve("BENCH_r07.json"),
+      """{"n":7,"rc":0,"tail":"\":0.461,\"shared_components\":{\"sim\":19.9,""" +
+        """\"minhash\":5.1},\"sf\":\"/x\"}\n"}""")
+    Files.writeString(d.resolve("BENCH_FULL.json"),
+      """{"metric":"total","sf":"/x","shared_build_sec":51.62}""")
+    assert(Bench.sharedBaseline(d, Some("/x"), Some(4)).isEmpty)
   }
 
   test("Verify.costOrder reads BENCH_FULL.json from the given dir; " +

@@ -18,25 +18,39 @@ class RetentionSpec extends SparkSpec {
       .flatMap(id => bm.getStatus(id).map(id.name -> _.memSize)).toMap
   }
 
-  test("warmed ext components hold no broadcast block of 1 MiB or more " +
-    "once the cleaner has run") {
-    // A fresh copy of sf0.001: the session memo is keyed by dir, so
-    // the components build here whatever other suites have warmed.
+  /** The broadcast blocks of `minBytes` or more that `run` leaves
+    * behind on a fresh copy of sf0.001, once the cleaner has run. The
+    * session memo is keyed by dir, so `run` builds its artifacts here
+    * whatever other suites have warmed. */
+  private def blocksLeftBy(minBytes: Long)(run: String => Unit): Seq[String] = {
     val dir = Files.createTempDirectory("graft-retention").toFile
     FileUtils.copyDirectory(new java.io.File(sf001), dir)
     try {
       val before = broadcastBlocks().keySet
-      val components = SparkEntry.sharedComponents.toMap
-      Seq("minhash", "simhash", "vectors", "shingle_postings", "lm_tables")
-        .foreach(c => components(c)(spark, dir.getPath))
+      run(dir.getPath)
       // collects until the cleaner has freed what it can
       Bench.broadcastBytesRetained(spark)
-      val big = broadcastBlocks().filter { case (id, bytes) =>
-        !before(id) && bytes >= 1L * 1024 * 1024
-      }
-      assert(big.isEmpty, "broadcast blocks the warmed artifacts still pin: " +
-        big.toSeq.sortBy(_._1).map { case (id, b) => s"$id=$b" }.mkString(", "))
+      broadcastBlocks().collect {
+        case (id, bytes) if !before(id) && bytes >= minBytes => s"$id=$bytes"
+      }.toSeq.sorted
     } finally FileUtils.deleteQuietly(dir)
+  }
+
+  test("warmed ext components hold no broadcast block of 1 MiB or more " +
+    "once the cleaner has run") {
+    val components = SparkEntry.sharedComponents.toMap
+    val big = blocksLeftBy(1L * 1024 * 1024)(dir =>
+      Seq("minhash", "simhash", "vectors", "shingle_postings", "lm_tables")
+        .foreach(c => components(c)(spark, dir)))
+    assert(big.isEmpty, "broadcast blocks the warmed artifacts still pin: " +
+      big.mkString(", "))
+  }
+
+  test("q_semdedup holds no broadcast block once the cleaner has run") {
+    val left = blocksLeftBy(0L)(dir =>
+      SparkEntry.queries("q_semdedup")(spark, dir).count())
+    assert(left.isEmpty, "broadcast blocks q_semdedup's artifacts still pin: " +
+      left.mkString(", "))
   }
 
   test("Bench.broadcastBytesRetained counts the broadcast a persisted " +

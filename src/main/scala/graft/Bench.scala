@@ -65,7 +65,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * Beside them, `broadcast_bytes_retained` is the storage memory that
   * holds no cached RDD at the end of the run, read after full
   * collections: on a local driver, the broadcasts that cached plans
-  * still pin ([[graft.core.Cache.getOrPersist]]).
+  * still pin ([[graft.core.Cache.getOrPersist]]). `cached_bytes` is
+  * the cached RDDs' in-memory bytes, read at the same point.
   *
   * Timeout-proof (a run killed by a timeout still leaves numbers):
   *   - every finished query appends a line to `BENCH_PARTIAL.jsonl`;
@@ -156,23 +157,28 @@ object Bench {
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       CodeGenerator.compileTime / 1e9)
 
-  /** Storage memory minus cached-RDD bytes once full collections stop
-    * freeing storage: the broadcast blocks still reachable. Spark's
-    * cleaner drops an unreachable broadcast only after a collection
-    * has found it, so this collects until a round frees nothing. */
-  private[graft] def broadcastBytesRetained(spark: SparkSession): Long = {
-    def collect(): Long = {
+  /** (broadcast, cached) bytes in storage memory once full collections
+    * stop freeing it: storage memory minus the cached RDDs' in-memory
+    * bytes (the broadcast blocks still reachable), and those bytes.
+    * Spark's cleaner drops an unreachable broadcast only after a
+    * collection has found it, so this collects until a round frees
+    * nothing. */
+  private[graft] def storageRetained(spark: SparkSession): (Long, Long) = {
+    def collect(): (Long, Long) = {
       System.gc()
       Thread.sleep(200) // lets the cleaner thread act on what was found
-      SparkEnv.get.memoryManager.storageMemoryUsed -
-        spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+      val cached = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+      (SparkEnv.get.memoryManager.storageMemoryUsed - cached, cached)
     }
     var prev = collect()
     var cur = collect()
     var i = 0
-    while (cur < prev && i < 5) { prev = cur; cur = collect(); i += 1 }
+    while (cur._1 < prev._1 && i < 5) { prev = cur; cur = collect(); i += 1 }
     cur
   }
+
+  private[graft] def broadcastBytesRetained(spark: SparkSession): Long =
+    storageRetained(spark)._1
 
   @volatile private var finalPrinted = false
   @volatile private var stopping = false
@@ -386,7 +392,7 @@ object Bench {
     val warmL = sweep("warm", math.max(budget * 0.95,
       elapsed + budget * 0.15))
     val cg2 = codegen()
-    val retained = broadcastBytesRetained(spark)
+    val (retained, cachedBytes) = storageRetained(spark)
     val warmMeasured = warmL.map { case (n, s, _, _) => n -> s }
     val warmByName = warmMeasured.toMap
     val warmPartial = warmMeasured.size < cold.size
@@ -416,7 +422,7 @@ object Bench {
          |"codegen_compiles_warm":${cg2._1 - cg1._1},
          |"codegen_compile_sec_cold":${cg1._2 - cg0._2},
          |"codegen_compile_sec_warm":${cg2._2 - cg1._2},
-         |"broadcast_bytes_retained":$retained,
+         |"broadcast_bytes_retained":$retained,"cached_bytes":$cachedBytes,
          |"warm_partial":$warmPartial,
          |"bench_only":${benchOnly.map(_.size).getOrElse(0)},
          |"median_override":${overrideMedian.isDefined},

@@ -155,9 +155,7 @@ object Cache {
     * however small the cached rows are. Each relation fills at least
     * one Tungsten page (2 MiB, [[Tuning.SessionDefaults]]). So a build
     * whose plan broadcasts is a Snapshot ([[getOrSnapshot]]); this
-    * shape is for builds without broadcasts, and for frames a consumer
-    * must read as an `InMemoryRelation` (the `pair_moments` cache that
-    * `Moments.decFromLong` casts). */
+    * shape is for builds without broadcasts. */
   def getOrPersist(spark: SparkSession, name: String, dir: String)
                   (build: => DataFrame): DataFrame =
     memo(spark, name, dir)(build.persist(StorageLevel.MEMORY_AND_DISK))

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Pairwise co-rating moment aggregation — the Spark re-expression of
@@ -11,24 +11,23 @@ import org.apache.spark.sql.functions._
   *
   * The reference materializes every C(n,2) pair per user through an MR
   * shuffle with no combiner (its docstring calls this "the main
-  * performance bottleneck"). Here the pair generation is a self
-  * equi-join on `user_id` with the canonicalizing theta condition
-  * `item_x < item_y`, and the moment accumulation is a hash aggregate —
-  * Spark supplies the missing partial/final (combiner) split
-  * automatically, and AQE splits skewed hub-user partitions.
+  * performance bottleneck"). Here the pair generation is a sort-merge
+  * self equi-join on `user_id` with the canonicalizing theta condition
+  * `item_x < item_y`, and the moment accumulation is a hash aggregate
+  * with Spark's partial/final (combiner) split.
   *
   * Moments are summed over `rating_i` (1e-4 fixed-point LONG, see
   * [[graft.io.Sources.ratings]]): integer sums are exact, hence
-  * independent of shuffle order. Products stay < 2^63 while
-  * co-rater counts per pair < ~3·10^4 — far above testdata;
-  * [[RatingStats.longExact]] is the exact bound, and past it
+  * independent of shuffle order. [[RatingStats.longExact]] is the
+  * bound under which the LONG sums cannot overflow; past it
   * [[pairMomentsDec]] sums in DECIMAL(38,0).
   *
-  * 100 TB notes: bucket the ratings table by `user_id` at write time —
-  * the self-join then co-partitions and its shuffle disappears; the
-  * only remaining exchange is the group-by-pair, whose key space
-  * (item×item) is naturally well-spread. MAX_NUM_RATERS (R3) is the
-  * reference's own skew guard and is applied *before* this join.
+  * Over a ratings table bucketed by `user_id` (the session's
+  * [[graft.io.Bucketing]] layout, and what a 100 TB deployment writes at
+  * ingest) the self-join co-partitions, and the only exchange is the
+  * group-by-pair, whose key space (item×item) is naturally
+  * well-spread. MAX_NUM_RATERS (R3) is the reference's own skew guard
+  * and is applied *before* this join.
   */
 object Moments {
 
@@ -37,56 +36,34 @@ object Moments {
     * — all LONG except the item keys. Extra per-side carry columns
     * (e.g. nraters) can be listed in `carry`: emitted as
     * `<name>_x`/`<name>_y` via min() (constant within a pair-side). */
-  def pairMoments(ratings: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val a = ratings.select(
-      (col("user_id") +: col("item_id").as("item_x") +: col("rating_i").as("rx")
-        +: carry.map(c => col(c).as(s"${c}_x"))): _*)
-    val b = ratings.select(
-      (col("user_id") +: col("item_id").as("item_y") +: col("rating_i").as("ry")
-        +: carry.map(c => col(c).as(s"${c}_y"))): _*)
-    val carryAggs = carry.flatMap(c =>
-      Seq(min(col(s"${c}_x")).as(s"${c}_x"), min(col(s"${c}_y")).as(s"${c}_y")))
-    val aggs = Seq(
-      count(lit(1)).as("n"),
-      sum(col("rx")).as("sx"),
-      sum(col("ry")).as("sy"),
-      sum(col("rx") * col("rx")).as("sxx"),
-      sum(col("ry") * col("ry")).as("syy"),
-      sum(col("rx") * col("ry")).as("sxy")) ++ carryAggs
-    a.join(b, Seq("user_id"))
-      .where(col("item_x") < col("item_y"))
-      .groupBy(col("item_x"), col("item_y"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  def pairMoments(ratings: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    pairSums(ratings, carry, col("rating_i"))
 
   /** DECIMAL(38,0)-accumulating twin of [[pairMoments]] for the 100 TB
     * deployment envelope: the LONG variant's `rating_i²` products
-    * overflow 2^63 once `rating_i` passes ~3·10^9 in fixed-point units
-    * (or co-rater counts per pair reach ~10^4 at full 5-star scale ×
-    * ~10^14 products). Here each side is widened to DECIMAL(19,0)
-    * before the multiply — Spark's precision rules make the product
-    * DECIMAL(38,0) and the sums stay exact to ~10^38, the same
-    * envelope [[Det.fsumDec4]] documents. Output schema: n LONG; sx,
-    * sy DECIMAL(29,0); sxx, syy, sxy DECIMAL(38,0) — [[asDoubles]]
-    * works unchanged on top.
+    * overflow 2^63 once `rating_i` passes ~3·10^9 in fixed-point units.
+    * Here each side is widened to DECIMAL(19,0) before the multiply —
+    * Spark's precision rules make the product DECIMAL(38,0) and the
+    * sums stay exact to ~10^38, the same envelope [[Det.fsumDec4]]
+    * documents. Output schema: n LONG; sx, sy DECIMAL(29,0); sxx, syy,
+    * sxy DECIMAL(38,0) — [[asDoubles]] works unchanged on top.
     *
     * DuckDB twin: plain `sum(a.rating_i*b.rating_i)` — DuckDB
     * accumulates BIGINT sums in HUGEINT (128-bit) natively, so the
-    * SQL side is [[pairMomentsSql]] as-is.
-    *
-    * When [[RatingStats.longExact]] holds, [[decMoments]] casts the
-    * LONG moments instead ([[decFromLong]]): same values, same schema,
-    * no second C(n,2) join and aggregate. This aggregation runs only
-    * past that bound, where a LONG sum could overflow. */
-  def pairMomentsDec(ratings: DataFrame, carry: Seq[String] = Nil): DataFrame = {
-    val a = ratings.select(
-      (col("user_id") +: col("item_id").as("item_x")
-        +: col("rating_i").cast("decimal(19,0)").as("rx")
-        +: carry.map(c => col(c).as(s"${c}_x"))): _*)
-    val b = ratings.select(
-      (col("user_id") +: col("item_id").as("item_y")
-        +: col("rating_i").cast("decimal(19,0)").as("ry")
-        +: carry.map(c => col(c).as(s"${c}_y"))): _*)
+    * SQL side is [[pairMomentsSql]] as-is. */
+  def pairMomentsDec(ratings: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    pairSums(ratings, carry, col("rating_i").cast("decimal(19,0)"))
+
+  /** The C(n,2) self-join and moment aggregate over rating value `r`.
+    * The join is hinted sort-merge: on a table bucketed by `user_id`
+    * it needs no exchange, and it never becomes a broadcast hash join,
+    * whose relation a persisted result would pin for the session
+    * ([[Cache.getOrPersist]]). */
+  private def pairSums(ratings: DataFrame, carry: Seq[String],
+                       r: Column): DataFrame = {
+    def side(s: String) = ratings.select(
+      (col("user_id") +: col("item_id").as(s"item_$s") +: r.as(s"r$s")
+        +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
     val carryAggs = carry.flatMap(c =>
       Seq(min(col(s"${c}_x")).as(s"${c}_x"), min(col(s"${c}_y")).as(s"${c}_y")))
     val aggs = Seq(
@@ -96,7 +73,7 @@ object Moments {
       sum(col("rx") * col("rx")).as("sxx"),
       sum(col("ry") * col("ry")).as("syy"),
       sum(col("rx") * col("ry")).as("sxy")) ++ carryAggs
-    a.join(b, Seq("user_id"))
+    side("x").join(side("y").hint("merge"), Seq("user_id"))
       .where(col("item_x") < col("item_y"))
       .groupBy(col("item_x"), col("item_y"))
       .agg(aggs.head, aggs.tail: _*)
@@ -142,13 +119,15 @@ object Moments {
       big(1).abs.max(big(2).abs), row.getLong(3))
   }
 
-  /** The DECIMAL pair moments of `ratings`: [[decFromLong]] of `long`
-    * (its [[pairMoments]]) when `stats` rules out LONG overflow, else
-    * [[pairMomentsDec]]. `long` is not evaluated on that path: an
-    * overflowing LONG build throws under ANSI. */
-  def decMoments(ratings: DataFrame, stats: RatingStats,
-                 long: => DataFrame): DataFrame =
-    if (stats.longExact) decFromLong(long) else pairMomentsDec(ratings)
+  /** The n ≥ 2 DECIMAL pair moments of `ratings`: while `stats` rules
+    * out LONG overflow, a view that casts `long` (its [[pairMoments]],
+    * [[decFromLong]]); past the bound, `keep` (which may persist it) of
+    * the [[pairMomentsDec]] aggregate. `long` is not evaluated on that
+    * path: an overflowing LONG build throws under ANSI. */
+  def decMoments(ratings: DataFrame, stats: RatingStats, long: => DataFrame)
+                (keep: DataFrame => DataFrame): DataFrame =
+    if (stats.longExact) decFromLong(long).where(col("n") >= 2)
+    else keep(pairMomentsDec(ratings).where(col("n") >= 2))
 
   /** Cross-side pair moments: every co-rating pair with one rating
     * from `a` and one from `b` (same user, distinct items),

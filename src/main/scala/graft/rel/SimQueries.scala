@@ -18,19 +18,13 @@ object SimQueries {
   import Oracle.r4
   import graft.core.Cache
 
-  /** Shared intermediates, materialized once per session (Cache doc).
-    * `moments` is the unfiltered pair-moment table that 7 of the
-    * queries consume — the single most expensive sub-plan in the
-    * inventory. */
-  /** NOTE (plan-audited): pre-repartitioning this cache by user_id
-    * does NOT eliminate the self-join exchange — with AQE enabled the
-    * cached plan root is AdaptiveSparkPlan, whose partitioning is
-    * opaque to consumers, so EnsureRequirements re-shuffles anyway.
-    * The shuffle-free layout for the pair join is the bucketed table
-    * (io.Bucketing, zero-Exchange plan asserted in ApiSpec), which a
-    * 100 TB deployment writes at ingest. */
+  // Shared intermediates, materialized once per session (Cache doc).
+
   /** Ratings in the bucketed-by-user layout (one-time write per
-    * session+dir): the self-join's co-partitioned source. */
+    * session+dir): the self-join's co-partitioned source. A cache
+    * repartitioned by user_id would not do: with AQE its plan root is
+    * AdaptiveSparkPlan, whose partitioning is opaque to consumers, so
+    * the join would shuffle again. */
   private def ratingsBucketed(spark: SparkSession, dir: String): DataFrame =
     graft.io.Bucketing.materializeOnce(spark, "ratings", dir,
       by = "user_id", sortCols = Seq("user_id", "item_id"))(
@@ -41,40 +35,21 @@ object SimQueries {
   private[graft] def ratings(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrPersist(spark, "ratings", dir)(ratingsBucketed(spark, dir))
 
-  /** The LONG pair-moment cache (the 7 similarity queries, ranking,
-    * serving, pipeline). r16 split: this WAS the fused LONG+DECIMAL
-    * table (one aggregate, since deleted) — measured at sf0.1, the fused
-    * 11-column persist costs 23.1 s vs 5.0 s for the LONG-only table
-    * (12.7M pair rows; the five DECIMAL(38,0) aggregates plus their
-    * columnar-cache encode dominate), and the decimal columns serve
-    * exactly ONE query. The r8 fuse predated the JIT fix
-    * (Tuning: codegen.hugeMethodLimit) that made the standalone
-    * decimal aggregation cheap again — with it, splitting into this
-    * LONG cache plus the n≥2-filtered decimal cache ([[momentsDec]])
-    * is strictly better: ~10.5 s of shared build where the fused
-    * persist paid 23.1, and ~1.4 GB less cache memory. */
+  /** The LONG pair-moment cache (the similarity queries, ranking,
+    * serving, pipeline). Its build is the sort-merge self-join over the
+    * bucketed ratings, so it pins no broadcast relation. */
   private[graft] def moments(spark: SparkSession, dir: String): DataFrame =
     Cache.getOrPersist(spark, "pair_moments", dir)(
       Moments.pairMoments(ratingsBucketed(spark, dir)))
 
-  /** DECIMAL overflow-audit twin, cached only for the n ≥ 2 pair
-    * population its single consumer (q_sim_pearson_dec) serves. When
-    * the ratings' [[Moments.RatingStats]] bound rules out LONG
-    * overflow, the LONG sums are exact and this is a cast of the
-    * [[moments]] cache ([[Moments.decFromLong]]): no second C(n,2)
-    * join and aggregate. Past the bound it is the DECIMAL-buffer
-    * aggregate over every co-rating pair ([[Moments.pairMomentsDec]]),
-    * and the LONG cache is never touched (its build would throw under
-    * ANSI).
-    * Either way only 413k of the 12.7M sf0.1 pair rows survive the
-    * n ≥ 2 filter, so the decimal columnar encode is noise. Any
-    * future consumer that needs n = 1 decimal pairs calls
-    * [[Moments.decMoments]] directly. */
+  /** The n ≥ 2 DECIMAL pair moments of q_sim_pearson_dec. While the
+    * ratings' [[Moments.RatingStats]] bound rules out LONG overflow they
+    * are an uncached cast view of the [[moments]] cache; past it, the
+    * DECIMAL aggregate over every co-rating pair, persisted, and the
+    * LONG cache is never touched (its build would throw under ANSI). */
   private[graft] def momentsDec(spark: SparkSession, dir: String): DataFrame =
-    Cache.getOrPersist(spark, "pair_moments_dec_n2", dir)(
-      Moments.decMoments(ratingsBucketed(spark, dir),
-          ratingStats(spark, dir), moments(spark, dir))
-        .where(col("n") >= 2))
+    Moments.decMoments(ratingsBucketed(spark, dir), ratingStats(spark, dir),
+      moments(spark, dir))(Cache.getOrPersist(spark, "pair_moments_dec_n2", dir)(_))
 
   /** The ratings' pair-sum bound and largest per-user posting list,
     * one job memoized per (session, dir). */
@@ -87,14 +62,12 @@ object SimQueries {
     ratingStats(spark, dir).maxUserItems
 
   /** Force this module's session-shared intermediates (bucketed
-    * ratings table, ratings cache, pair-moment caches, rating-stats memo,
+    * ratings table, ratings cache, pair-moment cache, rating-stats memo,
     * the two neighbor-list snapshots) so bench runs can account the
     * one-time build separately from per-query time. */
   def warm(spark: SparkSession, dir: String): Unit = {
-    // Sub-step stderr timers (r16): the component swung 17–107 s
-    // under co-tenant load and the single _shared:sim row could not
-    // say WHICH leg absorbed the noise vs which leg was structurally
-    // slow. One line per leg, ~zero cost.
+    // One stderr timer line per leg, so a slow component names the
+    // leg that absorbed the time.
     def leg[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
@@ -388,8 +361,7 @@ object SimQueries {
     // cast; the decimal-buffer aggregation that runs past the bound
     // is held by PropertySpec (adversarial magnitudes where LONG
     // cannot even form a product term) and MomentsSpec (the fallback
-    // path of Moments.decMoments). Cached pre-filtered to this
-    // query's n>=2 population (see the momentsDec scaladoc).
+    // path of Moments.decMoments).
     "q_sim_pearson_dec" -> ((s, d) =>
       Moments.asDoubles(momentsDec(s, d))
         .where(col("n") >= 2)

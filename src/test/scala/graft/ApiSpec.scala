@@ -109,22 +109,23 @@ class ApiSpec extends SparkSpec {
   }
 
   test("pair moments over materializeOnce plan a single Exchange (the group-by)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bucketed = Bucketing.materializeOnce(spark, "ratings_plan", sf001,
-        by = "user_id", sortCols = Seq("user_id", "item_id"))(
-        graft.io.Sources.ratings(spark, sf001))
-      // memoized: second call returns the same table without rewriting
-      val again = Bucketing.materializeOnce(spark, "ratings_plan", sf001,
-        by = "user_id")(fail("builder must not run twice"))
-      val m = graft.core.Moments.pairMoments(bucketed)
-      val plan = m.queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(plan).length
-      assert(exchanges == 1,
-        s"self-join side should be exchange-free, only the pair group-by shuffles:\n$plan")
-      assert(m.count() > 0 && again.count() == bucketed.count())
-    } finally
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // default confs: AQE on, default broadcast threshold — the hinted
+    // sort-merge join keeps a small table from becoming a broadcast
+    val bucketed = Bucketing.materializeOnce(spark, "ratings_plan", sf001,
+      by = "user_id", sortCols = Seq("user_id", "item_id"))(
+      graft.io.Sources.ratings(spark, sf001))
+    // memoized: second call returns the same table without rewriting
+    val again = Bucketing.materializeOnce(spark, "ratings_plan", sf001,
+      by = "user_id")(fail("builder must not run twice"))
+    val m = graft.core.Moments.pairMoments(bucketed)
+    val plan = m.queryExecution.executedPlan.toString
+    val exchanges = "Exchange".r.findAllIn(plan).length
+    assert(exchanges == 1,
+      s"self-join side should be exchange-free, only the pair group-by shuffles:\n$plan")
+    // collect runs this plan, so AQE's run-time re-plan shows too
+    assert(m.collect().nonEmpty && again.count() == bucketed.count())
+    val adaptive = m.queryExecution.executedPlan.toString
+    assert(!adaptive.contains("Broadcast"), adaptive)
   }
 
   test("the session pins a 2 MiB Tungsten page, so a persisted frame's " +

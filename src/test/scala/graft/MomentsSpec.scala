@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.core.{Det, Moments, Ranking, Similarity => S}
@@ -41,8 +42,12 @@ class MomentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val stats = Moments.ratingStats(df)
     assert(stats === Moments.RatingStats(2L, BigInt(987654321098765L), 3L))
     assert(!stats.longExact)
-    val row = Moments.decMoments(df, stats, fail("the LONG moments were built"))
-      .collect()(0)
+    var kept = false
+    val row = Moments.decMoments(df, stats, fail("the LONG moments were built")) { dec =>
+      kept = true
+      dec
+    }.collect()(0)
+    assert(kept, "past the bound the DECIMAL aggregate is what the caller keeps")
     val xs = raw.filter(_._2 == "A").sortBy(_._1).map(t => BigInt(t._3))
     val ys = raw.filter(_._2 == "B").sortBy(_._1).map(t => BigInt(t._3))
     def dec(c: String) = BigInt(row.getAs[java.math.BigDecimal](c).toBigIntegerExact)
@@ -70,16 +75,20 @@ class MomentsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
   }
 
-  test("after SimQueries.warm the pair_moments_dec_n2 cache is a cast of the pair_moments cache, with no join") {
+  test("under the bound pair_moments_dec_n2 is an uncached cast view of the " +
+    "pair_moments cache, whose build pins no broadcast") {
     SimQueries.warm(spark, sf001)
     val cm = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
-    def relation(df: DataFrame): InMemoryRelation =
-      cm.lookupCachedData(df.asInstanceOf[classic.Dataset[_]]).get.cachedRepresentation
-    val long = relation(SimQueries.moments(spark, sf001)).cacheBuilder
-    val build = relation(SimQueries.momentsDec(spark, sf001)).cacheBuilder.cachedPlan
-    val scans = collect(build) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-    assert(scans.exists(_ eq long), build.toString)
-    assert(collect(build) { case j: BaseJoinExec => j }.isEmpty, build.toString)
+    def lookup(df: DataFrame) = cm.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+    val long = lookup(SimQueries.moments(spark, sf001)).get.cachedRepresentation.cacheBuilder
+    val dec = SimQueries.momentsDec(spark, sf001)
+    assert(lookup(dec).isEmpty, "momentsDec has a cache entry of its own")
+    val plan = dec.queryExecution.executedPlan
+    val scans = collect(plan) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+    assert(scans.nonEmpty && scans.forall(_ eq long), plan.toString)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.toString)
+    val built = long.cachedPlan
+    assert(collect(built) { case b: BroadcastExchangeExec => b }.isEmpty, built.toString)
   }
 
   test("q_topk_neighbors reads the rec_ils_top10 snapshot and equals the direct topKAgg ranking") {

@@ -46,6 +46,17 @@ class RetentionSpec extends SparkSpec {
       big.mkString(", "))
   }
 
+  test("the warmed sim component and q_movies_dialect hold no broadcast " +
+    "block of 1 MiB or more once the cleaner has run") {
+    val sim = SparkEntry.sharedComponents.toMap.apply("sim")
+    val big = blocksLeftBy(1L * 1024 * 1024) { dir =>
+      sim(spark, dir)
+      SparkEntry.queries("q_movies_dialect")(spark, dir).count()
+    }
+    assert(big.isEmpty, "broadcast blocks the sim artifacts still pin: " +
+      big.mkString(", "))
+  }
+
   test("q_semdedup holds no broadcast block once the cleaner has run") {
     val left = blocksLeftBy(0L)(dir =>
       SparkEntry.queries("q_semdedup")(spark, dir).count())
